@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted n-gram-Jaccard DEDUP SIGNATURE STORE — the dedup analog of
@@ -335,16 +335,14 @@ object DedupIndex {
   private def foldGramDf(spark: SparkSession, dir: String): Unit = {
     if (!hasGramDf(spark, dir) ||
       !graft.util.Fs.exists(spark, gramDfDelta(dir))) return
-    val staging = s"$dir/gramdf/base_staging"
     graft.util.IngestMarker.write(spark, dir, "gramdf delta fold in flight")
     // the fold rewrites to the BUCKET-PARTITIONED layout (upgrading a
     // legacy unpartitioned base in passing), PRESERVING the store's
     // recorded gramdf bucket count
     val nb = gramDfBucketsOf(spark, dir)
-    writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L),
-      staging, nb)
-    graft.util.Fs.rmTree(spark, gramDfBase(dir))
-    graft.util.Fs.rename(spark, staging, gramDfBase(dir)): Unit
+    graft.util.StoreKernel.swapTable(spark,
+        graft.util.StoreKernel.Table(gramDfBase(dir)))(
+      writeGramDfBase(mergedGramDf(spark, dir).filter(col("df") =!= 0L), _, nb))
     writeGramDfLayout(spark, dir, nb)
     graft.util.Fs.rmTree(spark, gramDfDelta(dir))
     graft.util.IngestMarker.clear(spark, dir)
@@ -370,8 +368,24 @@ object DedupIndex {
         hotGramsSchema, rows)
   }
 
-  private def readMeta(spark: SparkSession, dir: String) =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
+  private def requireFormat(meta: Row, dir: String): Unit =
+    require(meta.getAs[Int]("format_version") == Format,
+      s"dedup index at $dir has format ${meta.getAs[Int]("format_version")}" +
+        s", expected $Format — rebuild via ensure()")
+
+  /** Mutation bracket ([[graft.util.StoreKernel.mutate]]) with the dedup
+    * index's format gate. */
+  private def mutate[T](spark: SparkSession, dir: String, op: String)(
+      body: Row => T): T =
+    graft.util.StoreKernel.mutate(spark, dir, op)(requireFormat(_, dir))(body)
+
+  private def prefixT(dir: String) =
+    graft.util.StoreKernel.Table(s"$dir/prefix", Seq("bucket"))
+  private def setsT(dir: String) =
+    graft.util.StoreKernel.Table(s"$dir/sets", Seq("sbucket"))
+
+  /** The partitioned tables maintenance stage-and-swaps. */
+  private def tables(dir: String) = Seq(prefixT(dir), setsT(dir))
 
   /** Per-bucket prefix-row STATISTICS (`prefstats/`) — the
     * [[graft.plans.RangeJoinNative.rangeJoinChosen]] pattern applied
@@ -588,32 +602,20 @@ object DedupIndex {
   def ensure(docs: DataFrame, dir: String, threshold: Double,
       nBuckets: Int = 0, nIdBuckets: Int = 0, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        // bucket counts are a LAYOUT fact the store carries in meta; a
-        // caller on the derive-default (0) accepts whatever the store
-        // was built with (a maintained store's corpus has grown since
-        // build, so re-deriving here would spuriously rebuild) — only
-        // an EXPLICIT count is a contract to enforce
-        meta.getAs[Int]("format_version") == Format &&
-          math.abs(meta.getAs[Double]("threshold") - threshold) < Eps &&
-          (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
-          (nIdBuckets == 0 ||
-            meta.getAs[Int]("n_id_buckets") == nIdBuckets)
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum) = fingerprint(docs, idCol, textCol) // NOT caught
-        meta.getAs[Long]("n_docs") == n &&
-          meta.getAs[Long]("checksum") == sum
-      }
-    }
-    if (!valid) build(docs, dir, threshold, nBuckets, nIdBuckets,
-      idCol, textCol)
+    graft.util.StoreKernel.ensure(docs.sparkSession, dir) { meta =>
+      // bucket counts are a LAYOUT fact the store carries in meta; a
+      // caller on the derive-default (0) accepts whatever the store
+      // was built with (a maintained store's corpus has grown since
+      // build, so re-deriving here would spuriously rebuild) — only
+      // an EXPLICIT count is a contract to enforce
+      meta.getAs[Int]("format_version") == Format &&
+        math.abs(meta.getAs[Double]("threshold") - threshold) < Eps &&
+        (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
+        (nIdBuckets == 0 || meta.getAs[Int]("n_id_buckets") == nIdBuckets)
+    } { meta =>
+      val (n, sum) = fingerprint(docs, idCol, textCol)
+      meta.getAs[Long]("n_docs") == n && meta.getAs[Long]("checksum") == sum
+    }(build(docs, dir, threshold, nBuckets, nIdBuckets, idCol, textCol))
   }
 
   /** Verified near-dup pairs of `batch` against the live store AND
@@ -627,11 +629,8 @@ object DedupIndex {
   def probePairs(batch: DataFrame, dir: String, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = batch.sparkSession
-    graft.util.IngestMarker.requireAbsent(spark, dir, "probe")
-    val meta = readMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has format ${meta.getAs[Int]("format_version")}" +
-        s", expected $Format — rebuild via ensure()")
+    val meta = graft.util.StoreKernel.open(spark, dir, "probe")(
+      requireFormat(_, dir))
     val t0 = meta.getAs[Double]("threshold")
     require(threshold >= t0 - Eps,
       s"probe threshold $threshold is below the store threshold $t0 — " +
@@ -763,12 +762,7 @@ object DedupIndex {
   def append(batch: DataFrame, dir: String, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "append")
-    val meta = readMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has format ${meta.getAs[Int]("format_version")}" +
-        s", expected $Format — rebuild via ensure()")
+    mutate(spark, dir, "append") { meta =>
     val t0 = meta.getAs[Double]("threshold")
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nIdBuckets = meta.getAs[Int]("n_id_buckets")
@@ -826,49 +820,25 @@ object DedupIndex {
   def delete(deleted: DataFrame, dir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = deleted.sparkSession
-    import spark.implicits._
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "delete")
-    val meta = readMeta(spark, dir)
-    // same guard as probePairs/compact/compactFiles (r14 advice): a
-    // format-1 store must fail LOUD here too — without it, delete's
-    // writeMeta stamps the current format and silently relabels a
-    // legacy store that has no hotgrams/ table, wedging every later op
-    require(meta.getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has format ${meta.getAs[Int]("format_version")}" +
-        s", expected $Format — rebuild via ensure()")
-    val ids = deleted.select(col(idCol).cast("long").as("nid"))
-      .localCheckpoint(eager = true)
-    // ONE aggregate answers every row-shaped audit (total, indexable,
-    // distinct) AND the fingerprint — previously four separate jobs.
-    // The bit_xor skips null-text rows exactly like fingerprint() does
-    // (they are never indexed, so they must not contribute).
-    val audit = deleted.agg(
-      count(lit(1)),
-      count(col(textCol)),
-      countDistinct(col(idCol)),
-      expr(s"bit_xor(CASE WHEN $textCol IS NOT NULL " +
-        s"THEN xxhash64($idCol, $textCol) END)")).head()
-    val nDel = audit.getLong(0)
-    val nIdx = audit.getLong(1)
-    require(nIdx == nDel,
-      s"${nDel - nIdx} of $nDel delete rows have null $textCol — " +
-        "null-text docs are never indexed and cannot be deleted")
-    require(audit.getLong(2) == nDel,
-      s"delete set contains duplicate ${idCol}s")
-    val nStored = ids.join(
-      readSets(spark, dir, idCol).select(col(idCol).as("nid")),
-      Seq("nid"), "left_semi").count()
-    require(nStored == nDel,
-      s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(spark.read.parquet(s"$dir/tombstones")
-        .select("nid"), Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel ${idCol}s are already tombstoned (double delete)")
+    // the format gate matters here too (r14 advice): without it, a
+    // format-1 store's meta would be restamped with the current format,
+    // silently relabelling a legacy store that has no hotgrams/ table
+    mutate(spark, dir, "delete") { meta =>
+    // every row has text (checked), so the fingerprint covers them all
+    val (ids, audit) = graft.util.StoreKernel.auditDelete(deleted, dir,
+        idCol, "nid", Seq(count(col(textCol)),
+          expr(s"bit_xor(xxhash64($idCol, $textCol))")),
+        a => require(a.getLong(2) == a.getLong(0),
+          s"${a.getLong(0) - a.getLong(2)} of ${a.getLong(0)} delete rows " +
+            s"have null $textCol — null-text docs are never indexed and " +
+            "cannot be deleted")) {
+      _ => readSets(spark, dir, idCol).select(col(idCol).as("nid"))
     }
-    val dn = nIdx
-    val dsum = if (audit.isNullAt(3)) 0L else audit.getLong(3)
+    val nDel = audit.getLong(0)
+    // lazy, but its integral-id check runs here — before the marker,
+    // so a non-integral id column fails with the store untouched
+    val gramsDel = Dedup.shingleHashes(indexable(deleted, idCol, textCol),
+      idCol, textCol)
     // tombstones, the NEGATIVE df delta, and the meta commit are one
     // atomicity domain now that gramdf/ must stay exact (a crash
     // between them would leave df overstated and the fingerprint
@@ -876,13 +846,12 @@ object DedupIndex {
     // a crash fails later ops LOUD and ensure() rebuilds.
     graft.util.IngestMarker.write(spark, dir,
       s"delete of $nDel docs in flight")
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
+    graft.util.StoreKernel.tombstone(ids, dir)
     if (hasGramDf(spark, dir))
-      writeGramDfDelta(spark, dir,
-        Dedup.shingleHashes(indexable(deleted, idCol, textCol),
-          idCol, textCol), sign = -1)
-    writeMeta(spark, dir, meta.getAs[Long]("n_docs") - dn,
-      meta.getAs[Long]("checksum") ^ dsum, meta.getAs[Long]("max_id"),
+      writeGramDfDelta(spark, dir, gramsDel, sign = -1)
+    writeMeta(spark, dir, meta.getAs[Long]("n_docs") - nDel,
+      meta.getAs[Long]("checksum") ^ (if (audit.isNullAt(3)) 0L
+        else audit.getLong(3)), meta.getAs[Long]("max_id"),
       meta.getAs[Double]("threshold"), meta.getAs[Int]("n_buckets"),
       meta.getAs[Int]("n_id_buckets"))
     graft.util.IngestMarker.clear(spark, dir)
@@ -892,38 +861,12 @@ object DedupIndex {
   /** Fold tombstones into the store: rewrite ONLY the prefix buckets
     * and set sbuckets that contain deleted rows — stage-and-swap with
     * crash recovery, the [[VectorIndex.compact]] shape applied to two
-    * partitioned tables. Tombstones drop LAST, so merge-on-read stays
-    * correct through any crash; a staged partition whose live directory
-    * is missing (crash between rm and rename) is the only copy of its
-    * survivors and is renamed in before anything else. */
-  /** Finish any crashed stage-and-swap ([[compact]] or
-    * [[compactFiles]] — they share staging paths, so either pass
-    * recovers the other's crash): a staged partition whose live
-    * directory is missing is the only copy of its rows and is renamed
-    * in; staged partitions whose live directory survived are stale
-    * duplicates and are discarded with the staging root. */
-  private def recoverStaging(spark: SparkSession, dir: String): Unit = {
-    def recover(staging: String, live: String, part: String): Unit = {
-      graft.util.Fs.listDirNames(spark, staging)
-        .filter(_.startsWith(s"$part="))
-        .foreach { d =>
-          if (!graft.util.Fs.exists(spark, s"$live/$d"))
-            graft.util.Fs.rename(spark, s"$staging/$d", s"$live/$d"): Unit
-        }
-      graft.util.Fs.rmTree(spark, staging)
-    }
-    recover(s"$dir/prefix_staging", s"$dir/prefix", "bucket")
-    recover(s"$dir/sets_staging", s"$dir/sets", "sbucket")
-  }
-
+    * partitioned tables ([[compactFiles]] shares the staging paths, so
+    * either pass recovers the other's crash). Tombstones drop LAST, so
+    * merge-on-read stays correct through any crash. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
-    require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has an unexpected format — rebuild via ensure()")
-    val prefStaging = s"$dir/prefix_staging"
-    val setsStaging = s"$dir/sets_staging"
-    recoverStaging(spark, dir)
+    mutate(spark, dir, "compact") { meta =>
+    tables(dir).foreach(graft.util.StoreKernel.recover(spark, _))
     // gramdf maintenance first (compact is the heavyweight commit):
     // when unfolded deltas exist, evaluate — the cheap candidate tick
     // unless deletes lowered the threshold — then FORCE-fold them back
@@ -931,52 +874,18 @@ object DedupIndex {
     // No deltas → base is already exact; the ordinary due-trigger tick
     // still runs (free when not due). The hotgrams fold is
     // content-preserving and safe either way.
-    if (hasGramDf(spark, dir) &&
-      graft.util.Fs.exists(spark, gramDfDelta(dir))) {
-      refreshHotGramsLocked(spark, dir, force = true): Unit
-      maybeFoldGramDf(spark, dir, force = true)
-    } else {
-      refreshHotGramsLocked(spark, dir): Unit
-      maybeFoldGramDf(spark, dir, force = true)
-    }
+    refreshHotGramsLocked(spark, dir, meta, force = hasGramDf(spark, dir) &&
+      graft.util.Fs.exists(spark, gramDfDelta(dir))): Unit
+    maybeFoldGramDf(spark, dir, force = true)
     if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
     val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
     val idCol = spark.read.parquet(s"$dir/sets").columns
       .find(c => c != "sh" && c != "sbucket").get
-    val rawPref = spark.read.parquet(s"$dir/prefix")
-    val rawSets = spark.read.parquet(s"$dir/sets")
-    val affB = rawPref.join(tomb.withColumnRenamed("nid", idCol),
-        Seq(idCol), "left_semi")
-      .select("bucket").distinct().collect().map(_.getInt(0))
-    val affS = rawSets.join(tomb.withColumnRenamed("nid", idCol),
-        Seq(idCol), "left_semi")
-      .select("sbucket").distinct().collect().map(_.getInt(0))
-    if (affB.nonEmpty) {
-      rawPref.filter(col("bucket").isin(affB.map(Int.box).toSeq: _*))
-        .join(tomb.withColumnRenamed("nid", idCol), Seq(idCol), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(prefStaging)
-      affB.foreach { b =>
-        graft.util.Fs.rmTree(spark, s"$dir/prefix/bucket=$b")
-        if (graft.util.Fs.exists(spark, s"$prefStaging/bucket=$b"))
-          graft.util.Fs.rename(spark, s"$prefStaging/bucket=$b",
-            s"$dir/prefix/bucket=$b"): Unit
-      }
-      graft.util.Fs.rmTree(spark, prefStaging)
-    }
-    if (affS.nonEmpty) {
-      rawSets.filter(col("sbucket").isin(affS.map(Int.box).toSeq: _*))
-        .join(tomb.withColumnRenamed("nid", idCol), Seq(idCol), "left_anti")
-        .repartition(col("sbucket"))
-        .write.mode("overwrite").partitionBy("sbucket").parquet(setsStaging)
-      affS.foreach { s =>
-        graft.util.Fs.rmTree(spark, s"$dir/sets/sbucket=$s")
-        if (graft.util.Fs.exists(spark, s"$setsStaging/sbucket=$s"))
-          graft.util.Fs.rename(spark, s"$setsStaging/sbucket=$s",
-            s"$dir/sets/sbucket=$s"): Unit
-      }
-      graft.util.Fs.rmTree(spark, setsStaging)
-    }
+    val tombId = tomb.withColumnRenamed("nid", idCol)
+    graft.util.StoreKernel.dropRows(spark, prefixT(dir),
+      spark.read.parquet(s"$dir/prefix"), tombId, idCol)
+    graft.util.StoreKernel.dropRows(spark, setsT(dir),
+      spark.read.parquet(s"$dir/sets"), tombId, idCol)
     graft.util.Fs.rmTree(spark, s"$dir/tombstones")
     rewriteStats(spark, dir) // folded rows leave the stats too
     }
@@ -1005,43 +914,16 @@ object DedupIndex {
     * 16 batches (amortized O(1) files touched per ingested row). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
       maxRecordsPerFile: Long = 8000000L, refreshHot: Boolean = true): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
+    mutate(spark, dir, "compactFiles") { meta =>
     require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
-      s"dedup index at $dir has an unexpected format — rebuild via ensure()")
-    recoverStaging(spark, dir)
+    tables(dir).foreach(graft.util.StoreKernel.recover(spark, _))
     // hot-gram drift maintenance rides the file-merge cadence (r14
     // verdict item 1): recutting affected docs' prefixes rewrites
     // whole buckets to one task's output anyway, so refresh-then-fold
     // never merges a bucket twice
-    if (refreshHot) refreshHotGramsLocked(spark, dir): Unit
-    def fold(table: String, part: String): Unit = {
-      val live = s"$dir/$table"
-      val staging = s"$dir/${table}_staging"
-      val over = graft.util.Fs.listDirNames(spark, live)
-        .filter(_.startsWith(s"$part="))
-        .filter(d =>
-          graft.util.Fs.dataFileCount(spark, s"$live/$d") > maxFiles)
-        .map(_.stripPrefix(s"$part=").toInt)
-      if (over.nonEmpty) {
-        spark.read.parquet(live)
-          .filter(col(part).isin(over.map(Int.box): _*))
-          .repartition(col(part))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .partitionBy(part).parquet(staging)
-        over.foreach { v =>
-          graft.util.Fs.rmTree(spark, s"$live/$part=$v")
-          if (graft.util.Fs.exists(spark, s"$staging/$part=$v"))
-            graft.util.Fs.rename(spark, s"$staging/$part=$v",
-              s"$live/$part=$v"): Unit
-        }
-        graft.util.Fs.rmTree(spark, staging)
-      }
-    }
-    fold("prefix", "bucket")
-    fold("sets", "sbucket")
+    if (refreshHot) refreshHotGramsLocked(spark, dir, meta): Unit
+    tables(dir).foreach(
+      graft.util.StoreKernel.mergeFiles(spark, _, maxFiles, maxRecordsPerFile))
     }
   }
 
@@ -1092,20 +974,16 @@ object DedupIndex {
     * promoted. */
   def refreshHotGrams(spark: SparkSession, dir: String,
       force: Boolean = false): Long =
-    graft.util.StoreLease.withLease(spark, dir, "refreshHotGrams") {
-      graft.util.IngestMarker.requireAbsent(spark, dir, "refreshHotGrams")
-      require(readMeta(spark, dir).getAs[Int]("format_version") == Format,
-        s"dedup index at $dir has an unexpected format — rebuild via ensure()")
-      recoverStaging(spark, dir)
-      refreshHotGramsLocked(spark, dir, force)
+    mutate(spark, dir, "refreshHotGrams") { meta =>
+      tables(dir).foreach(graft.util.StoreKernel.recover(spark, _))
+      refreshHotGramsLocked(spark, dir, meta, force)
     }
 
-  /** [[refreshHotGrams]] body; caller holds the lease and has run the
-    * marker/format/staging gates. */
-  private def refreshHotGramsLocked(spark: SparkSession,
-      dir: String, force: Boolean = false): Long = {
+  /** [[refreshHotGrams]] body; caller runs inside the mutation bracket
+    * (`meta` is its row) and has recovered the staging paths. */
+  private def refreshHotGramsLocked(spark: SparkSession, dir: String,
+      meta: Row, force: Boolean = false): Long = {
     import spark.implicits._
-    val meta = readMeta(spark, dir)
     val nDocs = meta.getAs[Long]("n_docs")
     if (nDocs == 0) return 0L
     val statsDue = statsTotals(spark, dir) match {
@@ -1248,24 +1126,12 @@ object DedupIndex {
       .join(affIds, Seq(idCol), "left_semi")
       .select("bucket").distinct().collect().map(_.getInt(0))
     val newB = newPref.select("bucket").distinct().collect().map(_.getInt(0))
-    val affB = (oldB ++ newB).distinct.toSeq
-    if (affB.nonEmpty) {
-      val staging = s"$dir/prefix_staging"
+    val affB = (oldB ++ newB).distinct.toSeq.map(b => Seq(b.toString))
+    // newPref's buckets are all in affB (newB ⊆ affB)
+    graft.util.StoreKernel.swapPartitions(spark, prefixT(dir),
       readPrefixTable(spark, dir, idCol)
-        .filter(col("bucket").isin(affB.map(Int.box): _*))
-        .join(affIds, Seq(idCol), "left_anti")
-        .unionByName(newPref
-          .filter(col("bucket").isin(affB.map(Int.box): _*)))
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-      affB.foreach { b =>
-        graft.util.Fs.rmTree(spark, s"$dir/prefix/bucket=$b")
-        if (graft.util.Fs.exists(spark, s"$staging/bucket=$b"))
-          graft.util.Fs.rename(spark, s"$staging/bucket=$b",
-            s"$dir/prefix/bucket=$b"): Unit
-      }
-      graft.util.Fs.rmTree(spark, staging)
-    }
+        .filter(graft.util.StoreKernel.keyFilter(Seq("bucket"), affB))
+        .join(affIds, Seq(idCol), "left_anti").unionByName(newPref), affB)
     rewriteStats(spark, dir) // recut buckets + re-armed trigger
     graft.util.IngestMarker.clear(spark, dir)
     // promotion COMPLETE — only now may evalmeta advance (a crash
@@ -1301,12 +1167,11 @@ object DedupIndex {
     val hotFiles = graft.util.Fs.dataFileCount(spark, s"$dir/hotgrams")
     if ((force && hotFiles > 1) || hotFiles > GramDfFoldFiles) {
       val hot = readHotGramsArr(spark, dir)
-      val staging = s"$dir/hotgrams_staging"
       graft.util.IngestMarker.write(spark, dir, "hotgrams fold in flight")
-      graft.util.Sidecar.write(spark, staging, hotGramsSchema,
-        hot.toSeq.map(g => Seq[Any](g)))
-      graft.util.Fs.rmTree(spark, s"$dir/hotgrams")
-      graft.util.Fs.rename(spark, staging, s"$dir/hotgrams"): Unit
+      graft.util.StoreKernel.swapTable(spark,
+          graft.util.StoreKernel.Table(s"$dir/hotgrams"))(
+        graft.util.Sidecar.write(spark, _, hotGramsSchema,
+          hot.toSeq.map(g => Seq[Any](g))))
       graft.util.IngestMarker.clear(spark, dir)
       System.err.println(s"[DedupIndex] hotgrams at $dir folded to one " +
         s"file: ${hot.length} grams (broadcast-sized by the df lemma)")
@@ -1395,7 +1260,7 @@ object DedupIndex {
           pairsAfter.exceptAll(pairsCompacted).count() == 0
       val noTombLeft = !graft.util.Fs.exists(s, s"$dir/tombstones")
       val setsCount = s.read.parquet(s"$dir/sets").count()
-      val metaDocs = readMeta(s, dir).getAs[Long]("n_docs")
+      val metaDocs = graft.util.StoreKernel.readMeta(s, dir).getAs[Long]("n_docs")
       val deletedGone = delSet.count() > 0 && setsCount == metaDocs
       kept
         .agg(count(lit(1)).as("n_kept"),

@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -125,30 +125,46 @@ object GraphAnn {
     graft.util.Sidecar.write(spark, s"$dir/meta", graphMetaSchema,
       Seq(Seq[Any](n, sum, m, initCellSize, descentRounds, 3)))
 
-  private def readGraphMeta(spark: SparkSession,
-      dir: String): org.apache.spark.sql.Row =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
+  /** Incremental meta commit: `dn` nodes whose row hashes XOR to
+    * `dsum` joined (dn > 0) or left (dn < 0) the graph. */
+  private def commitMeta(spark: SparkSession, dir: String, meta: Row,
+      dn: Long, dsum: Long): Unit =
+    writeGraphMeta(spark, dir, meta.getAs[Long]("n_vectors") + dn,
+      meta.getAs[Long]("checksum") ^ dsum, meta.getAs[Int]("m"),
+      meta.getAs[Int]("init_cell_size"), meta.getAs[Int]("descent_rounds"))
+
+  /** Mutation bracket ([[graft.util.StoreKernel.mutate]]) with the
+    * graph store's format gate. */
+  private def mutate[T](spark: SparkSession, dir: String, op: String)(
+      body: Row => T): T =
+    graft.util.StoreKernel.mutate(spark, dir, op) { meta =>
+      require(meta.schema.fieldNames.contains("format_version") &&
+          meta.getAs[Int]("format_version") == 3,
+        s"graph store at $dir predates format 3 — rebuild via ensure()")
+    }(body)
+
+  private def edgesT(dir: String) = graft.util.StoreKernel.Table(s"$dir/edges")
+  private def nodesT(dir: String) = graft.util.StoreKernel.Table(s"$dir/nodes")
 
   /** Nodes of `edges` at (or beyond) the 2M degree cap. */
   private def saturatedCount(edges: DataFrame, m: Int): Long =
     edges.groupBy("src").agg(count(lit(1)).as("__deg"))
       .filter(col("__deg") >= 2 * m).count()
 
+  private val RepairFraction = 0.02
+  private val RepairMinNodes = 64L
+
   /** Repair is due when append-accumulated saturation mass passes
-    * max(64, fraction·nodes) — the dedup refresh trigger's shape. The
-    * fraction is a knob (`-Dgraft.graph.repairFraction`, default 0.02);
-    * `-Dgraft.graph.autoRepair=false` disables folding the repair into
-    * append/compact entirely (the manual entry point always works). */
+    * max([[RepairMinNodes]], [[RepairFraction]]·nodes) — the dedup
+    * refresh trigger's shape. `-Dgraft.graph.autoRepair=false` disables
+    * folding the repair into append/compact entirely (the manual entry
+    * point always works). */
   private def repairDue(spark: SparkSession, dir: String,
       nNodes: Long): Boolean = {
     if (sys.props.get("graft.graph.autoRepair").contains("false")) return false
-    val frac = sys.props.get("graft.graph.repairFraction")
-      .map(_.toDouble).getOrElse(0.02)
-    val minNodes = sys.props.get("graft.graph.repairMinNodes")
-      .map(_.toLong).getOrElse(64L)
     readSatStats(spark, dir) match {
       case Some((total, appended)) => total > 0 &&
-        appended >= math.max(minNodes, (frac * nNodes).toLong)
+        appended >= math.max(RepairMinNodes, (RepairFraction * nNodes).toLong)
       case None => false // legacy store: seeded by the next append
     }
   }
@@ -267,6 +283,9 @@ object GraphAnn {
     * (its out-edges) and as a destination (its appearances in other
     * nodes' top-M), so the anti-join runs on both endpoints. */
   def load(spark: SparkSession, dir: String): DataFrame = {
+    // a crashed append ([[graft.util.IngestMarker]]) may have swapped in
+    // edges that meta and `nodes/` do not describe: fail loud
+    graft.util.IngestMarker.requireAbsent(spark, dir, "load")
     val edges = spark.read.parquet(s"$dir/edges")
     if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
       val tomb = spark.read.parquet(s"$dir/tombstones")
@@ -286,22 +305,16 @@ object GraphAnn {
   def ensure(corpus: DataFrame, dir: String, m: Int = 16,
       descentRounds: Int = 3, initCellSize: Int = 256): DataFrame = {
     val spark = corpus.sparkSession
-    import spark.implicits._
-    val (n, sum) = fingerprint(corpus) // corpus-side failure RETHROWS
-    // NonFatal only (r13 advice): a fatal error (OOM) during the meta
-    // read must propagate, not count as "store invalid" and trigger
-    // the rebuild's delete of a healthy store.
-    val valid = try {
-      val meta = readGraphMeta(spark, dir)
-      meta.getAs[Long]("n_vectors") == n &&
-        meta.getAs[Long]("checksum") == sum &&
-        meta.getAs[Int]("m") == m &&
+    lazy val (n, sum) = fingerprint(corpus) // corpus-side: NOT caught
+    graft.util.StoreKernel.ensure(spark, dir) { meta =>
+      meta.getAs[Int]("m") == m &&
         meta.getAs[Int]("init_cell_size") == initCellSize &&
         meta.getAs[Int]("descent_rounds") == descentRounds &&
         meta.getAs[Int]("format_version") == 3 &&
         graft.util.Fs.exists(spark, s"$dir/nodes")
-    } catch { case scala.util.control.NonFatal(_) => false }
-    if (!valid) graft.util.StoreLease.withLease(spark, dir, "build") {
+    } { meta =>
+      meta.getAs[Long]("n_vectors") == n && meta.getAs[Long]("checksum") == sum
+    }(graft.util.StoreLease.withLease(spark, dir, "build") {
       buildsThisProcess += 1
       graft.util.Fs.rmTree(spark, dir)
       buildNeighborGraph(corpus, m, descentRounds, initCellSize)
@@ -314,7 +327,7 @@ object GraphAnn {
       writeSatStats(spark, dir,
         saturatedCount(spark.read.parquet(s"$dir/edges"), m), 0L)
       writeGraphMeta(spark, dir, n, sum, m, initCellSize, descentRounds)
-    }
+    })
     load(spark, dir)
   }
 
@@ -329,36 +342,14 @@ object GraphAnn {
     * loud-failure rationale as [[VectorIndex.delete]]. */
   def delete(deleted: DataFrame, dir: String): Unit = {
     val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    val meta = readGraphMeta(spark, dir)
-    require(meta.schema.fieldNames.contains("format_version") &&
-        meta.getAs[Int]("format_version") == 3,
-      s"graph store at $dir predates format 3 — rebuild via ensure()")
-    val ids = deleted.select(col("vec_id").cast("long").as("nid"))
-      .localCheckpoint(eager = true)
-    // one aggregate answers both audit counts (total + distinct) —
-    // the separate count()/distinct().count() pair was two full jobs
-    val cnt = ids.agg(count(lit(1)), countDistinct(col("nid"))).head()
-    val nDel = cnt.getLong(0)
-    require(cnt.getLong(1) == nDel,
-      s"delete set contains duplicate vec_ids")
-    val nMember = ids.join(spark.read.parquet(s"$dir/nodes"),
-      Seq("nid"), "left_semi").count()
-    require(nMember == nDel,
-      s"${nDel - nMember} of $nDel vec_ids are not indexed nodes at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(
-        spark.read.parquet(s"$dir/tombstones").select("nid"),
-        Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel vec_ids are already tombstoned (double delete)")
-    }
-    val (dn, dsum) = fingerprint(deleted)
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
-    writeGraphMeta(spark, dir, meta.getAs[Long]("n_vectors") - dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("m"), meta.getAs[Int]("init_cell_size"),
-      meta.getAs[Int]("descent_rounds"))
+    mutate(spark, dir, "delete") { meta =>
+      val (ids, audit) = graft.util.StoreKernel.auditDelete(deleted, dir,
+          "vec_id", "nid", Seq(expr("bit_xor(xxhash64(vec_id, embedding))"))) {
+        _ => spark.read.parquet(s"$dir/nodes")
+      }
+      graft.util.StoreKernel.tombstone(ids, dir)
+      commitMeta(spark, dir, meta, -audit.getLong(0),
+        if (audit.isNullAt(2)) 0L else audit.getLong(2))
     }
   }
 
@@ -381,21 +372,13 @@ object GraphAnn {
     */
   def compact(corpus: DataFrame, dir: String): Unit = {
     val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
+    mutate(spark, dir, "compact") { meta =>
     // The degree cap is the STORED graph's m, read from meta — a caller
     // parameter here could silently re-rank only the affected nodes to
     // a different 2M cap than the rest of the graph, breaking the
     // graph-wide degree invariant v28's gate asserts.
-    val m = readGraphMeta(spark, dir).getAs[Int]("m")
-    // recovery: finish a previous compact that crashed mid-swap
-    Seq("edges", "nodes").foreach { t =>
-      val stag = s"$dir/${t}_staging"
-      if (graft.util.Fs.exists(spark, stag)) {
-        if (!graft.util.Fs.exists(spark, s"$dir/$t"))
-          graft.util.Fs.rename(spark, stag, s"$dir/$t"): Unit
-        else graft.util.Fs.rmTree(spark, stag)
-      }
-    }
+    val m = meta.getAs[Int]("m")
+    Seq(edgesT(dir), nodesT(dir)).foreach(graft.util.StoreKernel.recover(spark, _))
     if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
     val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
     val raw = spark.read.parquet(s"$dir/edges")
@@ -421,19 +404,14 @@ object GraphAnn {
       .withColumn("sim", round(Similarity.cosine(col("sv"), col("dv")), 6))
       .select(col("src"), col("dst"), col("sim"))
     val affected = toDead.select("src").distinct()
-    val w = Window.partitionBy("src").orderBy(col("sim").desc, col("dst").asc)
     val repaired = dedupTopM(live.join(affected, Seq("src"), "left_semi")
       .unionByName(bridges), 2 * m)
     val untouched = live.join(affected, Seq("src"), "left_anti")
-    untouched.unionByName(repaired)
-      .write.mode("overwrite").parquet(s"$dir/edges_staging")
-    spark.read.parquet(s"$dir/nodes")
-      .join(tomb, Seq("nid"), "left_anti")
-      .write.mode("overwrite").parquet(s"$dir/nodes_staging")
-    Seq("edges", "nodes").foreach { t =>
-      graft.util.Fs.rmTree(spark, s"$dir/$t")
-      graft.util.Fs.rename(spark, s"$dir/${t}_staging", s"$dir/$t"): Unit
-    }
+    graft.util.StoreKernel.swapTable(spark, edgesT(dir))(
+      untouched.unionByName(repaired).write.mode("overwrite").parquet(_))
+    graft.util.StoreKernel.swapTable(spark, nodesT(dir))(
+      spark.read.parquet(s"$dir/nodes").join(tomb, Seq("nid"), "left_anti")
+        .write.mode("overwrite").parquet(_))
     graft.util.Fs.rmTree(spark, s"$dir/tombstones")
     // compaction re-ranked degrees: recompute sat_total exactly (the
     // rewrite above was already O(E)); the append odometer carries
@@ -442,11 +420,10 @@ object GraphAnn {
     val appended = readSatStats(spark, dir).map(_._2).getOrElse(0L)
     writeSatStats(spark, dir,
       saturatedCount(spark.read.parquet(s"$dir/edges"), m), appended)
-    val nLive = readGraphMeta(spark, dir).getAs[Long]("n_vectors")
-    if (repairDue(spark, dir, nLive)) {
+    if (repairDue(spark, dir, meta.getAs[Long]("n_vectors"))) {
       System.err.println(s"[GraphAnn] density repair due at $dir " +
         "after compact")
-      repairDensityLocked(corpus, dir): Unit
+      repairDensityLocked(corpus, dir, m): Unit
     }
     }
   }
@@ -459,33 +436,21 @@ object GraphAnn {
     * Rewrites any table whose data-file count exceeds `maxFiles` to
     * ~`targetBytes`-sized output files, stage-and-swap through
     * [[compact]]'s staging paths (either pass recovers the other's
-    * crash — a staged table whose live dir is missing is renamed in). */
+    * crash). */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
-      targetBytes: Long = 128L * 1024 * 1024): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
-    require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    Seq("edges", "nodes").foreach { t =>
-      val stag = s"$dir/${t}_staging"
-      if (graft.util.Fs.exists(spark, stag)) {
-        if (!graft.util.Fs.exists(spark, s"$dir/$t"))
-          graft.util.Fs.rename(spark, stag, s"$dir/$t"): Unit
-        else graft.util.Fs.rmTree(spark, stag)
+      targetBytes: Long = 128L * 1024 * 1024): Unit =
+    mutate(spark, dir, "compactFiles") { _ =>
+      require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
+      Seq(edgesT(dir), nodesT(dir)).foreach { t =>
+        graft.util.StoreKernel.recover(spark, t)
+        if (graft.util.StoreKernel.overFull(spark, t, maxFiles).nonEmpty) {
+          val nOut = math.max(1L,
+            graft.util.Fs.dataSize(spark, t.path) / targetBytes + 1).toInt
+          graft.util.StoreKernel.swapTable(spark, t)(spark.read.parquet(t.path)
+            .repartition(nOut).write.mode("overwrite").parquet(_))
+        }
       }
     }
-    Seq("edges", "nodes").foreach { t =>
-      val live = s"$dir/$t"
-      if (graft.util.Fs.dataFileCount(spark, live) > maxFiles) {
-        val nOut = math.max(1L,
-          graft.util.Fs.dataSize(spark, live) / targetBytes + 1).toInt
-        val stag = s"$dir/${t}_staging"
-        spark.read.parquet(live).repartition(nOut)
-          .write.mode("overwrite").parquet(stag)
-        graft.util.Fs.rmTree(spark, live)
-        graft.util.Fs.rename(spark, stag, live): Unit
-      }
-    }
-      }
-  }
 
   /** Batched beam search: every query walks the graph simultaneously;
     * one edge join + one window per round. Entry nodes are the
@@ -637,20 +602,22 @@ object GraphAnn {
     *     edge lists pass through byte-identical.
     *
     * Cost is BATCH-local: O(|B|·(beam·rounds + M²)) — never a full
-    * refinement pass over the graph. Meta updates LAST (the commit
-    * point): a crash mid-append leaves a fingerprint mismatch, so the
-    * next [[ensure]] rebuilds rather than trusting a half-applied
-    * insert. Membership is enforced (a batch id already indexed fails
-    * loud — the XOR fingerprint would drift otherwise).
+    * refinement pass over the graph. Membership is enforced (a batch id
+    * already indexed fails loud — the XOR fingerprint would drift
+    * otherwise).
+    *
+    * Crash contract: the edge swap, the `nodes/` append and the meta
+    * commit sit inside one [[graft.util.IngestMarker]] window. A crash
+    * in it leaves edges that meta and `nodes/` do not describe (or no
+    * edge table at all), which a fingerprint over the pre-op corpus
+    * cannot see; with the marker down every later op fails loud and
+    * [[ensure]] rebuilds.
     */
   def append(batch: DataFrame, corpus: DataFrame, dir: String,
       beam: Int = 32, rounds: Int = 4,
       entries: Int = 16): Unit = {
     val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    val meta = readGraphMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == 3,
-      s"graph store at $dir predates format 3 — rebuild via ensure()")
+    mutate(spark, dir, "append") { meta =>
     // Degree cap from the STORED graph's m (see [[compact]]) — a
     // caller-supplied m diverging from the stored value would break
     // the graph-wide 2M degree invariant.
@@ -710,19 +677,13 @@ object GraphAnn {
       2 * m)
       .localCheckpoint(eager = true)
     val untouched = graph.join(affectedSrc, Seq("src"), "left_anti")
-    // stage-and-swap like compact; a crash before the meta write below
-    // is recovered by ensure()'s fingerprint-mismatch rebuild
-    val staging = s"$dir/edges_staging"
-    untouched.unionByName(rewritten)
-      .write.mode("overwrite").parquet(staging)
-    graft.util.Fs.rmTree(spark, s"$dir/edges")
-    graft.util.Fs.rename(spark, staging, s"$dir/edges"): Unit
-    ids.write.mode("append").parquet(s"$dir/nodes")
     val (dn, dsum) = fingerprint(batch)
-    writeGraphMeta(spark, dir, meta.getAs[Long]("n_vectors") + dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("m"), meta.getAs[Int]("init_cell_size"),
-      meta.getAs[Int]("descent_rounds"))
+    graft.util.IngestMarker.write(spark, dir, s"append of $bn nodes in flight")
+    graft.util.StoreKernel.swapTable(spark, edgesT(dir))(
+      untouched.unionByName(rewritten).write.mode("overwrite").parquet(_))
+    ids.write.mode("append").parquet(s"$dir/nodes")
+    commitMeta(spark, dir, meta, dn, dsum)
+    graft.util.IngestMarker.clear(spark, dir)
     // saturation odometer advance (after the commit point — the stats
     // are derived maintenance state, like the edges themselves): the
     // affected set's post-rewrite saturated count vs satBefore is this
@@ -743,7 +704,7 @@ object GraphAnn {
       repairDensityLocked(
         corpus.select(col("vec_id"), col("embedding"))
           .unionByName(batch.select(col("vec_id"), col("embedding"))),
-        dir): Unit
+        dir, m): Unit
     }
     }
   }
@@ -1213,24 +1174,20 @@ object GraphAnn {
   def repairDensity(corpus: DataFrame, dir: String,
       alpha: Double = 1.0): Long = {
     val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "repairDensity") {
-      repairDensityLocked(corpus, dir, alpha)
+    mutate(spark, dir, "repairDensity") { meta =>
+      repairDensityLocked(corpus, dir, meta.getAs[Int]("m"), alpha)
     }
   }
 
-  /** [[repairDensity]]'s body, assuming the caller already holds the
-    * store's writer lease — append/compact fold the repair in under
-    * their own lease (withLease is not re-entrant by design: a second
-    * acquire by the same holder is indistinguishable from a racing
-    * writer). */
-  private def repairDensityLocked(corpus: DataFrame, dir: String,
+  /** [[repairDensity]]'s body for the stored degree parameter `m`,
+    * assuming the caller already runs inside the store's mutation
+    * bracket — append/compact fold the repair in under their own lease
+    * (withLease is not re-entrant by design: a second acquire by the
+    * same holder is indistinguishable from a racing writer). */
+  private def repairDensityLocked(corpus: DataFrame, dir: String, m: Int,
       alpha: Double = 1.0): Long = {
     val spark = corpus.sparkSession
     require(alpha > 0, s"alpha must be positive: $alpha")
-    val meta = readGraphMeta(spark, dir)
-    require(meta.getAs[Int]("format_version") == 3,
-      s"graph store at $dir predates format 3 — rebuild via ensure()")
-    val m = meta.getAs[Int]("m")
     require(!graft.util.Fs.exists(spark, s"$dir/tombstones"),
       s"graph store at $dir has pending tombstones — compact before " +
         "repairDensity")
@@ -1310,11 +1267,8 @@ object GraphAnn {
         col("kept._2").as("sim"))
       .localCheckpoint(eager = true)
     val untouched = edges.join(saturated, Seq("src"), "left_anti")
-    val staging = s"$dir/edges_staging"
-    untouched.unionByName(diversified)
-      .write.mode("overwrite").parquet(staging)
-    graft.util.Fs.rmTree(spark, s"$dir/edges")
-    graft.util.Fs.rename(spark, staging, s"$dir/edges"): Unit
+    graft.util.StoreKernel.swapTable(spark, edgesT(dir))(
+      untouched.unionByName(diversified).write.mode("overwrite").parquet(_))
     // odometer reset: post-repair sat_total = repaired nodes that
     // legitimately kept 2M diverse edges; appended mass back to zero
     // so those nodes never re-arm the trigger by themselves

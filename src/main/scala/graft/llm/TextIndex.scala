@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted INVERTED-INDEX STORE for sparse (BM25) retrieval — the
@@ -199,9 +199,6 @@ object TextIndex {
         "postings yourself with a shuffle join " +
         "(-Dgraft.textindex.maxQueryRows raises the bound).")
 
-  private def readMeta(spark: SparkSession, dir: String) =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
-
   private def metaSchema =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n_docs",
@@ -234,11 +231,24 @@ object TextIndex {
   private def autoBuckets(nDocs: Long): Int =
     math.max(4L, math.min(16L, nDocs / 1000L)).toInt
 
-  private def requireFormat(meta: org.apache.spark.sql.Row,
-      dir: String): Unit =
+  private def requireFormat(meta: Row, dir: String): Unit =
     require(meta.getAs[Int]("format_version") == Format,
       s"text index at $dir has format ${meta.getAs[Int]("format_version")}" +
         s", expected $Format — rebuild via ensure()")
+
+  /** Mutation bracket ([[graft.util.StoreKernel.mutate]]) with the text
+    * index's format gate. */
+  private def mutate[T](spark: SparkSession, dir: String, op: String)(
+      body: Row => T): T =
+    graft.util.StoreKernel.mutate(spark, dir, op)(requireFormat(_, dir))(body)
+
+  private def postingsT(dir: String) =
+    graft.util.StoreKernel.Table(s"$dir/postings", Seq("bucket"))
+  private def docidsT(dir: String) =
+    graft.util.StoreKernel.Table(s"$dir/docids", Seq("dbucket"))
+
+  /** The partitioned tables maintenance stage-and-swaps. */
+  private def tables(dir: String) = Seq(postingsT(dir), docidsT(dir))
 
   /** Tokenize the corpus ONCE, write postings + docids + termstats +
     * meta. Holds the store's single-writer lease like every mutating
@@ -282,28 +292,17 @@ object TextIndex {
   def ensure(docs: DataFrame, dir: String, nBuckets: Int = 0,
       nDocBuckets: Int = 0, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
-    val spark = docs.sparkSession
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        // derive-default (0) accepts the store's own layout — only an
-        // explicit count is a contract (see [[DedupIndex.ensure]])
-        meta.getAs[Int]("format_version") == Format &&
-          (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
-          (nDocBuckets == 0 ||
-            meta.getAs[Int]("n_doc_buckets") == nDocBuckets)
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum, sumDl) = fingerprint(docs, idCol, textCol) // NOT caught
-        meta.getAs[Long]("n_docs") == n &&
-          meta.getAs[Long]("checksum") == sum &&
-          meta.getAs[Long]("sum_dl") == sumDl
-      }
-    }
-    if (!valid) build(docs, dir, nBuckets, nDocBuckets, idCol, textCol)
+    graft.util.StoreKernel.ensure(docs.sparkSession, dir) { meta =>
+      // derive-default (0) accepts the store's own layout — only an
+      // explicit count is a contract (see [[DedupIndex.ensure]])
+      meta.getAs[Int]("format_version") == Format &&
+        (nBuckets == 0 || meta.getAs[Int]("n_buckets") == nBuckets) &&
+        (nDocBuckets == 0 || meta.getAs[Int]("n_doc_buckets") == nDocBuckets)
+    } { meta =>
+      val (n, sum, sumDl) = fingerprint(docs, idCol, textCol)
+      meta.getAs[Long]("n_docs") == n && meta.getAs[Long]("checksum") == sum &&
+        meta.getAs[Long]("sum_dl") == sumDl
+    }(build(docs, dir, nBuckets, nDocBuckets, idCol, textCol))
   }
 
   /** Ingest a batch: tokenize at the edge (the ONE tokenizer), append
@@ -317,10 +316,7 @@ object TextIndex {
   def append(batch: DataFrame, dir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "append")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
+    mutate(spark, dir, "append") { meta =>
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nDocBuckets = meta.getAs[Int]("n_doc_buckets")
     val post = postingsOf(batch, idCol, textCol, nBuckets)
@@ -362,45 +358,37 @@ object TextIndex {
   def delete(deleted: DataFrame, dir: String, idCol: String = "doc_id",
       textCol: String = "text"): Unit = {
     val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "delete")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
+    mutate(spark, dir, "delete") { meta =>
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nDocBuckets = meta.getAs[Int]("n_doc_buckets")
     val idx = indexable(deleted, textCol)
-    val ids = deleted.select(col(idCol).cast("long").as("doc")).cache()
-    val nDel = ids.count()
-    require(idx.count() == nDel,
-      s"some of $nDel delete rows have null/empty $textCol — docs " +
-        "without postings are never indexed and cannot be deleted")
-    require(ids.distinct().count() == nDel,
-      s"delete set contains duplicate ${idCol}s")
-    val dbs = ids.select(pmod(col("doc"), lit(nDocBuckets)).cast("int")
-      .as("dbucket")).distinct().collect().map(_.getInt(0))
-    val nStored =
-      if (dbs.isEmpty) 0L
-      else readDocids(spark, dir)
-        .filter(col("dbucket").isin(dbs.map(Int.box).toSeq: _*))
-        .join(ids, Seq("doc"), "left_semi").count()
-    require(nStored == nDel,
-      s"${nDel - nStored} of $nDel ${idCol}s are not in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(spark.read.parquet(s"$dir/tombstones")
-        .select("doc"), Seq("doc"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel ${idCol}s are already tombstoned (double delete)")
+    // every row indexable, so the fingerprint columns cover them all
+    val (ids, audit) = graft.util.StoreKernel.auditDelete(deleted, dir,
+        idCol, "doc", Seq(
+          count(when(col(textCol).isNotNull &&
+            length(translate(col(textCol), " ", "")) > 0, 1)),
+          expr(s"bit_xor(xxhash64($idCol, $textCol))"),
+          coalesce(sum(tokenCount(col(textCol))), lit(0L)).cast("long")),
+        a => require(a.getLong(2) == a.getLong(0),
+          s"some of ${a.getLong(0)} delete rows have null/empty $textCol — " +
+            "docs without postings are never indexed and cannot be deleted")) {
+      ids =>
+        // membership pruned to the delete set's own dbuckets
+        val dbs = graft.util.StoreKernel.keysOf(ids.select(
+          pmod(col("doc"), lit(nDocBuckets)).as("dbucket")), Seq("dbucket"))
+        readDocids(spark, dir)
+          .filter(graft.util.StoreKernel.keyFilter(Seq("dbucket"), dbs))
+          .select("doc")
     }
-    val (dn, dsum, dDl) = fingerprint(deleted, idCol, textCol)
+    val nDel = audit.getLong(0)
     graft.util.IngestMarker.write(spark, dir,
       s"delete of $nDel docs in flight")
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
+    graft.util.StoreKernel.tombstone(ids, dir)
     writeTermDelta(spark, dir,
       HybridRetrieval.postings(idx, idCol, textCol), sign = -1, nBuckets)
-    ids.unpersist()
-    writeMeta(spark, dir, meta.getAs[Long]("n_docs") - dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Long]("sum_dl") - dDl, nBuckets, nDocBuckets)
+    writeMeta(spark, dir, meta.getAs[Long]("n_docs") - nDel,
+      meta.getAs[Long]("checksum") ^ (if (audit.isNullAt(3)) 0L else audit.getLong(3)),
+      meta.getAs[Long]("sum_dl") - audit.getLong(4), nBuckets, nDocBuckets)
     graft.util.IngestMarker.clear(spark, dir)
     }
   }
@@ -435,9 +423,8 @@ object TextIndex {
       qidCol: String = "qid", textCol: String = "text",
       maxDfFraction: Double = 1.0): DataFrame = {
     val spark = queries.sparkSession
-    graft.util.IngestMarker.requireAbsent(spark, dir, "search")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
+    val meta = graft.util.StoreKernel.open(spark, dir, "search")(
+      requireFormat(_, dir))
     val nBuckets = meta.getAs[Int]("n_buckets")
     val nDocs = meta.getAs[Long]("n_docs")
     def empty = {
@@ -504,9 +491,8 @@ object TextIndex {
   def phraseCount(queries: DataFrame, dir: String,
       qidCol: String = "qid", textCol: String = "text"): DataFrame = {
     val spark = queries.sparkSession
-    graft.util.IngestMarker.requireAbsent(spark, dir, "phraseCount")
-    val meta = readMeta(spark, dir)
-    requireFormat(meta, dir)
+    val meta = graft.util.StoreKernel.open(spark, dir, "phraseCount")(
+      requireFormat(_, dir))
     val nBuckets = meta.getAs[Int]("n_buckets")
     val qt = indexable(queries, textCol)
       .select(col(qidCol).cast("long").as("qid"),
@@ -537,90 +523,43 @@ object TextIndex {
       .agg(count(lit(1)).as("n_matches"))
   }
 
-  /** Finish any crashed stage-and-swap — shared by [[compact]] and
-    * [[compactFiles]] (same staging paths): a staged partition whose
-    * live directory is missing is the only copy of its rows and is
-    * renamed in; the rest of the staging root is stale and dropped. */
-  private def recoverStaging(spark: SparkSession, dir: String): Unit = {
-    def recover(staging: String, live: String, part: String): Unit = {
-      graft.util.Fs.listDirNames(spark, staging)
-        .filter(_.startsWith(s"$part="))
-        .foreach { d =>
-          if (!graft.util.Fs.exists(spark, s"$live/$d"))
-            graft.util.Fs.rename(spark, s"$staging/$d", s"$live/$d"): Unit
-        }
-      graft.util.Fs.rmTree(spark, staging)
-    }
-    recover(s"$dir/postings_staging", s"$dir/postings", "bucket")
-    recover(s"$dir/docids_staging", s"$dir/docids", "dbucket")
-  }
-
   /** Fold termstats deltas into an exact rewritten base. Marker-
     * guarded (a crash between the base rewrite and the delta drop
     * would double-count): fails later ops loud, ensure() rebuilds. */
   private def foldTermStats(spark: SparkSession, dir: String): Unit = {
     if (!graft.util.Fs.exists(spark, termDelta(dir))) return
-    val staging = s"$dir/termstats/base_staging"
     graft.util.IngestMarker.write(spark, dir, "termstats fold in flight")
-    mergedTermStats(spark, dir, None).filter(col("df") =!= 0L)
-      .repartition(col("bucket"))
-      .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-    graft.util.Fs.rmTree(spark, termBase(dir))
-    graft.util.Fs.rename(spark, staging, termBase(dir)): Unit
+    graft.util.StoreKernel.swapTable(spark,
+        graft.util.StoreKernel.Table(termBase(dir))) { staging =>
+      mergedTermStats(spark, dir, None).filter(col("df") =!= 0L)
+        .repartition(col("bucket"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
+    }
     graft.util.Fs.rmTree(spark, termDelta(dir))
     graft.util.IngestMarker.clear(spark, dir)
   }
 
   /** Fold tombstones into the store: rewrite ONLY the posting buckets
     * and docid dbuckets that contain deleted rows (stage-and-swap,
-    * crash-recoverable), drop the tombstone table, fold termstats.
-    * After compact a previously-deleted id may be re-ingested. */
+    * crash-recoverable — [[compactFiles]] shares the staging paths, so
+    * either pass recovers the other's crash), drop the tombstone table,
+    * fold termstats. After compact a previously-deleted id may be
+    * re-ingested. */
   def compact(spark: SparkSession, dir: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
-    requireFormat(readMeta(spark, dir), dir)
-    recoverStaging(spark, dir)
+    mutate(spark, dir, "compact") { meta =>
+    tables(dir).foreach(graft.util.StoreKernel.recover(spark, _))
     foldTermStats(spark, dir)
     if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
     val tomb = spark.read.parquet(s"$dir/tombstones").select(col("doc"))
-    val nDocBuckets = readMeta(spark, dir).getAs[Int]("n_doc_buckets")
-    // affected posting buckets: bounded IN-list (≤ nBuckets values)
-    val affB = readPostings(spark, dir)
-      .join(tomb, Seq("doc"), "left_semi")
-      .select("bucket").distinct().collect().map(_.getInt(0))
-    if (affB.nonEmpty) {
-      val staging = s"$dir/postings_staging"
-      readPostings(spark, dir)
-        .filter(col("bucket").isin(affB.map(Int.box).toSeq: _*))
-        .join(tomb, Seq("doc"), "left_anti")
-        .repartition(col("bucket"))
-        .write.mode("overwrite").partitionBy("bucket").parquet(staging)
-      affB.foreach { b =>
-        graft.util.Fs.rmTree(spark, s"$dir/postings/bucket=$b")
-        if (graft.util.Fs.exists(spark, s"$staging/bucket=$b"))
-          graft.util.Fs.rename(spark, s"$staging/bucket=$b",
-            s"$dir/postings/bucket=$b"): Unit
-      }
-      graft.util.Fs.rmTree(spark, staging)
-    }
+    graft.util.StoreKernel.dropRows(spark, postingsT(dir),
+      readPostings(spark, dir), tomb, "doc")
     // affected docid dbuckets: computed FROM the tombstones directly
-    val affD = tomb.select(pmod(col("doc"), lit(nDocBuckets)).cast("int")
-      .as("dbucket")).distinct().collect().map(_.getInt(0))
-    if (affD.nonEmpty) {
-      val staging = s"$dir/docids_staging"
+    val affD = graft.util.StoreKernel.keysOf(tomb.select(pmod(col("doc"),
+      lit(meta.getAs[Int]("n_doc_buckets"))).as("dbucket")), Seq("dbucket"))
+    graft.util.StoreKernel.swapPartitions(spark, docidsT(dir),
       readDocids(spark, dir)
-        .filter(col("dbucket").isin(affD.map(Int.box).toSeq: _*))
-        .join(tomb, Seq("doc"), "left_anti")
-        .repartition(col("dbucket"))
-        .write.mode("overwrite").partitionBy("dbucket").parquet(staging)
-      affD.foreach { d =>
-        graft.util.Fs.rmTree(spark, s"$dir/docids/dbucket=$d")
-        if (graft.util.Fs.exists(spark, s"$staging/dbucket=$d"))
-          graft.util.Fs.rename(spark, s"$staging/dbucket=$d",
-            s"$dir/docids/dbucket=$d"): Unit
-      }
-      graft.util.Fs.rmTree(spark, staging)
-    }
+        .filter(graft.util.StoreKernel.keyFilter(Seq("dbucket"), affD))
+        .join(tomb, Seq("doc"), "left_anti"), affD)
     graft.util.Fs.rmTree(spark, s"$dir/tombstones")
     }
   }
@@ -632,43 +571,17 @@ object TextIndex {
     * trigger. Rows pass through verbatim — tombstones are deliberately
     * NOT folded here. */
   def compactFiles(spark: SparkSession, dir: String,
-      maxFiles: Int = 16, maxRecordsPerFile: Long = 8000000L): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
-    require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    requireFormat(readMeta(spark, dir), dir)
-    recoverStaging(spark, dir)
-    def fold(table: String, part: String): Unit = {
-      val live = s"$dir/$table"
-      val staging = s"$dir/${table}_staging"
-      val over = graft.util.Fs.listDirNames(spark, live)
-        .filter(_.startsWith(s"$part="))
-        .filter(d =>
-          graft.util.Fs.dataFileCount(spark, s"$live/$d") > maxFiles)
-        .map(_.stripPrefix(s"$part=").toInt)
-      if (over.nonEmpty) {
-        spark.read.parquet(live)
-          .filter(col(part).isin(over.map(Int.box): _*))
-          .repartition(col(part))
-          .write.mode("overwrite")
-          .option("maxRecordsPerFile", maxRecordsPerFile)
-          .partitionBy(part).parquet(staging)
-        over.foreach { v =>
-          graft.util.Fs.rmTree(spark, s"$live/$part=$v")
-          if (graft.util.Fs.exists(spark, s"$staging/$part=$v"))
-            graft.util.Fs.rename(spark, s"$staging/$part=$v",
-              s"$live/$part=$v"): Unit
-        }
-        graft.util.Fs.rmTree(spark, staging)
+      maxFiles: Int = 16, maxRecordsPerFile: Long = 8000000L): Unit =
+    mutate(spark, dir, "compactFiles") { _ =>
+      require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
+      tables(dir).foreach { t =>
+        graft.util.StoreKernel.recover(spark, t)
+        graft.util.StoreKernel.mergeFiles(spark, t, maxFiles, maxRecordsPerFile)
       }
+      if (graft.util.Fs.exists(spark, termDelta(dir)) &&
+        graft.util.Fs.dataFileCount(spark, termDelta(dir)) > maxFiles)
+        foldTermStats(spark, dir)
     }
-    fold("postings", "bucket")
-    fold("docids", "dbucket")
-    if (graft.util.Fs.exists(spark, termDelta(dir)) &&
-      graft.util.Fs.dataFileCount(spark, termDelta(dir)) > maxFiles)
-      foldTermStats(spark, dir)
-    }
-  }
 
   // ------------------------------------------------------------------
   // tx1/tx2 — lifecycle + search gates under full DuckDB oracles
@@ -731,7 +644,7 @@ object TextIndex {
       val compactInvisible = searchRows() == viaStore
       val noTombLeft = !graft.util.Fs.exists(s, s"$dir/tombstones")
       val noDeltaLeft = !graft.util.Fs.exists(s, termDelta(dir))
-      val metaDocs = readMeta(s, dir).getAs[Long]("n_docs")
+      val metaDocs = graft.util.StoreKernel.readMeta(s, dir).getAs[Long]("n_docs")
       val docidsExact = readDocids(s, dir).count() == metaDocs
       val live = corpus.join(delSet.select("doc_id"), Seq("doc_id"),
         "left_anti").unionByName(batch)

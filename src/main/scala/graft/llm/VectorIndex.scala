@@ -1,7 +1,7 @@
 package graft.llm
 
 import graft.{QueryDef, Tables}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted IVF-PQ vector index: build ONCE, query many times.
@@ -50,13 +50,11 @@ object VectorIndex {
       codes: DataFrame,
       nVectors: Long)
 
-  // driver-side meta I/O ([[graft.util.Sidecar]]) — the one-row meta
-  // table is read at the top of every op and committed at the end of
-  // every mutation; neither needs a Spark job. Two shapes: the plain
-  // store's six fields, the filtered store's with `filter_col`.
-  private def readVMeta(spark: SparkSession, dir: String) =
-    graft.util.Sidecar.readHead(spark, s"$dir/meta")
-
+  // The plain store's codes live under `cell=` directories, the
+  // filtered store's under (filterCol, cell) — every lifecycle body
+  // below serves both, keyed by `filterCol` (None = plain). Meta has
+  // two shapes: the plain store's six fields, the filtered store's
+  // with `filter_col`.
   private def vMetaSchema(filtered: Boolean) = {
     import org.apache.spark.sql.types._
     val base = Seq(
@@ -70,6 +68,7 @@ object VectorIndex {
     StructType(base ++ tail)
   }
 
+  // driver-side meta commit ([[graft.util.Sidecar]]) — no Spark job
   private def writeVMeta(spark: SparkSession, dir: String, n: Long,
       sum: Long, dim: Int, nCells: Int, m: Int, kCodes: Int,
       filterCol: Option[String], fv: Int): Unit = {
@@ -79,34 +78,98 @@ object VectorIndex {
       vMetaSchema(filterCol.isDefined), Seq(row))
   }
 
+  /** Incremental meta commit: `dn` vectors whose row hashes XOR to
+    * `dsum` joined (dn > 0) or left (dn < 0) the store. XOR is its own
+    * inverse, so old ⊕ xor(rows) IS the changed corpus' checksum. */
+  private def commitMeta(spark: SparkSession, dir: String, meta: Row,
+      dn: Long, dsum: Long): Unit =
+    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") + dn,
+      meta.getAs[Long]("checksum") ^ dsum,
+      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
+      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
+      filterOf(meta), meta.getAs[Int]("format_version"))
+
+  private def filterOf(meta: Row): Option[String] =
+    if (meta.schema.fieldNames.contains("filter_col"))
+      Some(meta.getAs[String]("filter_col"))
+    else None
+
+  private def partCols(filterCol: Option[String]): Seq[String] =
+    filterCol.toSeq :+ "cell"
+
+  private def opName(op: String, filterCol: Option[String]): String =
+    if (filterCol.isEmpty) op else s"${op}Filtered"
+
+  /** The filter column participates in the fingerprint: a relabeled
+    * corpus must invalidate the filtered store. */
+  private def hashed(filterCol: Option[String]): Column =
+    expr(s"bit_xor(xxhash64(${("vec_id" +: "embedding" +: filterCol.toSeq)
+      .mkString(", ")}))")
+
   private def fingerprint(corpus: DataFrame,
-      extraCols: Seq[String] = Nil): (Long, Long) = {
-    val hashed = ("vec_id" +: "embedding" +: extraCols).mkString(", ")
-    val r = corpus
-      .agg(count(lit(1)), expr(s"bit_xor(xxhash64($hashed))"))
-      .head()
+      filterCol: Option[String]): (Long, Long) = {
+    val r = corpus.agg(count(lit(1)), hashed(filterCol)).head()
     (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  }
+
+  /** Every maintenance entry serves one layout: a plain op on a
+    * [[buildFiltered]] store (or the reverse) would mix cell-keyed and
+    * (filterCol, cell)-keyed paths. Fail loud naming the twin — inside
+    * the mutation bracket, so before any recovery sweep can touch the
+    * other variant's in-flight staging. */
+  private def requireLayout(meta: Row, dir: String,
+      filterCol: Option[String], op: String): Unit =
+    require(filterOf(meta) == filterCol, filterCol match {
+      case None => s"$op does not support the FILTERED (label, cell)-" +
+        s"partitioned store at $dir — use ${op}Filtered instead"
+      case Some(f) => s"$op expects a FILTERED store keyed by '$f' at " +
+        s"$dir — found " + filterOf(meta).fold("an unfiltered store")(
+          s => s"filter_col='$s'")
+    })
+
+  private def mutate[T](spark: SparkSession, dir: String, op: String,
+      filterCol: Option[String])(body: Row => T): T = {
+    val name = opName(op, filterCol)
+    graft.util.StoreKernel.mutate(spark, dir, name)(
+      requireLayout(_, dir, filterCol, name))(body)
   }
 
   /** Train both quantizer levels, encode the corpus, write the store.
     * Three corpus scans total (coarse Lloyd, residual Lloyd, encode) —
     * the once-per-corpus cost that [[search]] amortizes away. */
   def build(corpus: DataFrame, dir: String, nCells: Int = 16,
-      m: Int = 16, kCodes: Int = 16): Unit = {
+      m: Int = 16, kCodes: Int = 16): Unit =
+    buildIn(corpus, dir, None, nCells, m, kCodes)
+
+  /** Build a PRE-FILTERED store: codes partitioned by (filterCol, cell)
+    * — the layout v18's scaladoc promises at 100 TB ("st14's store with
+    * one more partition column"). A filtered search then prunes BOTH
+    * partition levels: only the query set's predicate values and probed
+    * cells are ever listed into tasks. The filter column participates
+    * in the fingerprint (a relabeled corpus must invalidate the store).
+    */
+  def buildFiltered(corpus: DataFrame, dir: String, filterCol: String,
+      nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Unit =
+    buildIn(corpus, dir, Some(filterCol), nCells, m, kCodes)
+
+  private def buildIn(corpus: DataFrame, dir: String,
+      filterCol: Option[String], nCells: Int, m: Int, kCodes: Int): Unit = {
     val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "build") {
+    graft.util.StoreLease.withLease(spark, dir, opName("build", filterCol)) {
     import spark.implicits._
     buildsThisProcess += 1
     graft.util.Fs.rmTree(spark, dir)
     val (coarse, books) = Similarity.ivfPqTrain(corpus, nCells, m, kCodes)
-    val (n, sum) = fingerprint(corpus)
-    // repartition by cell before the partitioned write: without it every
-    // task writes a file into every cell directory (tasks x cells small
-    // files — the classic partitionBy mistake at scale); with it each
-    // cell directory gets one contiguous file per shuffle partition
-    Similarity.ivfPqEncode(corpus, coarse, books)
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/codes")
+    val (n, sum) = fingerprint(corpus, filterCol)
+    // repartition by the partition columns before the partitioned
+    // write: without it every task writes a file into every cell
+    // directory (tasks x cells small files — the classic partitionBy
+    // mistake at scale); with it each cell directory gets one
+    // contiguous file per shuffle partition
+    Similarity.ivfPqEncode(corpus, coarse, books, keepCols = filterCol.toSeq)
+      .repartition(partCols(filterCol).map(col): _*)
+      .write.mode("overwrite").partitionBy(partCols(filterCol): _*)
+      .parquet(s"$dir/codes")
     val coarseRows = coarse.zipWithIndex.map { case (v, c) => (0, 0, c, v.toSeq) }
     val bookRows = for {
       (subArr, sub) <- books.zipWithIndex.toSeq
@@ -116,23 +179,17 @@ object VectorIndex {
       .toDF("level", "sub", "code", "vals")
       .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks")
     writeVMeta(spark, dir, n, sum, coarse(0).length, nCells, m, kCodes,
-      None, 1)
+      filterCol, 1)
     }
   }
 
-  def load(spark: SparkSession, dir: String): Loaded = {
-    // a crashed append ([[graft.util.IngestMarker]]) may have landed
-    // half a batch in the code partitions — searching it would
-    // silently return phantom rows; fail loud at the gateway instead
-    graft.util.IngestMarker.requireAbsent(spark, dir, "load/search")
-    val meta = readVMeta(spark, dir)
-    val nCells = meta.getAs[Int]("n_cells")
-    val m = meta.getAs[Int]("m")
-    val kCodes = meta.getAs[Int]("k_codes")
+  private def readCodebooks(spark: SparkSession, dir: String,
+      meta: Row): (Array[Array[Double]], Array[Array[Array[Double]]]) = {
     val cb = spark.read.parquet(s"$dir/codebooks")
       .select("level", "sub", "code", "vals").collect()
-    val coarse = Array.ofDim[Array[Double]](nCells)
-    val books = Array.ofDim[Array[Double]](m, kCodes)
+    val coarse = Array.ofDim[Array[Double]](meta.getAs[Int]("n_cells"))
+    val books = Array.ofDim[Array[Double]](meta.getAs[Int]("m"),
+      meta.getAs[Int]("k_codes"))
     cb.foreach { r =>
       val vals = r.getSeq[Double](3).toArray
       if (r.getInt(0) == 0) coarse(r.getInt(2)) = vals
@@ -140,6 +197,15 @@ object VectorIndex {
     }
     require(coarse.forall(_ != null) && books.forall(_.forall(_ != null)),
       s"vector index at $dir has an incomplete codebook table")
+    (coarse, books)
+  }
+
+  def load(spark: SparkSession, dir: String): Loaded = {
+    // a crashed append ([[graft.util.IngestMarker]]) may have landed
+    // half a batch in the code partitions — searching it would
+    // silently return phantom rows; fail loud at the gateway instead
+    val meta = graft.util.StoreKernel.open(spark, dir, "load/search")(_ => ())
+    val (coarse, books) = readCodebooks(spark, dir, meta)
     // merge-on-read: live codes = stored codes minus tombstones. The
     // anti-join's nid predicate sits ABOVE the scan, so search()'s
     // cell IN-list still pushes to the partition directories.
@@ -156,213 +222,141 @@ object VectorIndex {
     * merge-on-read shape (Iceberg/Delta delete files): deleted ids land
     * in a tombstone table; [[load]] anti-joins it so every search sees
     * only live rows. `deleted` must be the actual (vec_id, embedding)
-    * rows being removed: the meta fingerprint updates INCREMENTALLY
-    * (XOR is its own inverse — old ⊕ xor(deleted) IS the live-corpus
-    * fingerprint), so a later [[ensure]] over the live corpus validates
-    * without rebuild. Cost: O(|deleted|), zero store rewrite.
+    * rows being removed, each a live stored row exactly once (enforced
+    * by the kernel's delete audit): the meta fingerprint updates
+    * INCREMENTALLY, so a later [[ensure]] over the live corpus
+    * validates without rebuild. Cost: O(|deleted|), zero store rewrite.
     */
-  /** The plain maintenance entry points support the cell-partitioned
-    * store only: a [[buildFiltered]] store's codes live under
-    * (filterCol, cell) directories, so cell-keyed compaction paths and
-    * cell-only partitioned appends would silently mix layouts. Fail
-    * loud and name the filtered twin ([[deleteFiltered]] /
-    * [[compactFiltered]] / [[appendFiltered]]). */
-  private def requireUnfiltered(meta: org.apache.spark.sql.Row,
-      dir: String, op: String): Unit =
-    require(!meta.schema.fieldNames.contains("filter_col"),
-      s"$op does not support the FILTERED (label, cell)-partitioned " +
-        s"store at $dir — use ${op}Filtered instead")
+  def delete(deleted: DataFrame, dir: String): Unit =
+    deleteIn(deleted, dir, None)
 
-  def delete(deleted: DataFrame, dir: String): Unit = {
+  /** [[delete]] for the (filterCol, cell)-partitioned store: the
+    * fingerprint includes the filter column, so `deleted` must carry
+    * (vec_id, embedding, filterCol). [[load]]'s nid anti-join is
+    * layout-independent. */
+  def deleteFiltered(deleted: DataFrame, dir: String,
+      filterCol: String): Unit =
+    deleteIn(deleted, dir, Some(filterCol))
+
+  private def deleteIn(deleted: DataFrame, dir: String,
+      filterCol: Option[String]): Unit = {
     val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "delete") {
-    import spark.implicits._
-    graft.util.IngestMarker.requireAbsent(spark, dir, "delete")
-    val meta = readVMeta(spark, dir)
-    requireUnfiltered(meta, dir, "delete")
-    // The contract (every deleted row is a live stored row, exactly once)
-    // is ENFORCED, not just documented: XOR fingerprint maintenance is
-    // only exact under it — a double delete or a never-indexed row would
-    // silently drift n_vectors/checksum so a later ensure() validates
-    // against the wrong live corpus or rebuilds spuriously. Fail loud
-    // instead. Cost: one pass over the delete set + a semi-join against
-    // the (code-sized, not float-sized) store — cheap next to the
-    // corruption it prevents.
-    val ids = deleted.select(col("vec_id").cast("long").as("nid"))
-      .localCheckpoint(eager = true)
-    // one aggregate answers the row-shaped audits (total + distinct)
-    // AND the fingerprint — previously three separate jobs
-    val audit = deleted.agg(count(lit(1)),
-      countDistinct(col("vec_id")),
-      expr("bit_xor(xxhash64(vec_id, embedding))")).head()
-    val nDel = audit.getLong(0)
-    val nDistinct = audit.getLong(1)
-    require(nDistinct == nDel,
-      s"delete set contains ${nDel - nDistinct} duplicate vec_ids")
-    val nStored = ids.join(spark.read.parquet(s"$dir/codes").select("nid"),
-      Seq("nid"), "left_semi").count()
-    require(nStored == nDel,
-      s"${nDel - nStored} of $nDel vec_ids are not present in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(
-        spark.read.parquet(s"$dir/tombstones").select("nid"),
-        Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel vec_ids are already tombstoned (double delete)")
+    mutate(spark, dir, "delete", filterCol) { meta =>
+      val (ids, audit) = graft.util.StoreKernel.auditDelete(deleted, dir,
+          "vec_id", "nid", Seq(hashed(filterCol))) { _ =>
+        spark.read.parquet(s"$dir/codes").select("nid")
+      }
+      graft.util.StoreKernel.tombstone(ids, dir)
+      commitMeta(spark, dir, meta, -audit.getLong(0),
+        if (audit.isNullAt(2)) 0L else audit.getLong(2))
     }
-    val dn = nDel
-    val dsum = if (audit.isNullAt(2)) 0L else audit.getLong(2)
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") - dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      None, meta.getAs[Int]("format_version"))
-    }
+  }
+
+  /** Recover the code table's crashed stage-and-swap and return the
+    * table this layout's maintenance stages into. The filtered store
+    * stages under `codes_staging_filtered`, apart from the plain
+    * store's `codes_staging`; filtered stores of earlier builds staged
+    * under `codes_staging`, so a filtered pass recovers both. */
+  private def recoverCodes(spark: SparkSession, dir: String,
+      filterCol: Option[String]): graft.util.StoreKernel.Table = {
+    val tables = (if (filterCol.isEmpty) Seq("_staging")
+      else Seq("_staging", "_staging_filtered"))
+      .map(graft.util.StoreKernel.Table(s"$dir/codes", partCols(filterCol), _))
+    tables.foreach(graft.util.StoreKernel.recover(spark, _))
+    tables.last
   }
 
   /** Fold the tombstones into the store: rewrite ONLY the cell
     * partitions that contain deleted rows, then drop the tombstone
     * table. The maintenance pass that bounds merge-on-read's growing
     * anti-join cost, exactly like s13 bounds small-file growth.
-    *
-    * Crash-safe via STAGE-AND-SWAP: survivors are written durably to
-    * `codes_staging/` first, then each affected `cell=` directory is
-    * removed and its staged replacement renamed in. Tombstones are
-    * dropped only after the full swap, so a crash anywhere leaves
-    * merge-on-read correct (the anti-join still hides deleted rows),
-    * and the next [[compact]] call RECOVERS: a staged cell whose live
-    * directory is missing (crash between rm and rename) is the only
-    * copy of that cell's survivors and is renamed into place before
-    * anything else; staged cells whose live directory survived are
-    * stale duplicates and are discarded.
-    */
-  def compact(spark: SparkSession, dir: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compact") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compact")
-    // Layout check FIRST, before the recovery sweep touches anything:
-    // the meta read is independent of staging, and running the sweep
-    // first on a FILTERED store would delete a crashed
-    // compactFiltered's staged survivors (the only copy of its
-    // affected pairs) before the fail-loud guard ever fired. The two
-    // variants also use distinct staging paths (belt and braces).
-    requireUnfiltered(readVMeta(spark, dir), dir,
-      "compact")
-    val staging = s"$dir/codes_staging"
-    sweepPlainStaging(spark, dir, staging)
-    if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
-    val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
-    val raw = spark.read.parquet(s"$dir/codes")
-    val affected = raw.join(tomb, Seq("nid"), "left_semi")
-      .select("cell").distinct().collect().map(_.getInt(0))
-    if (affected.nonEmpty) {
-      // stage: survivors land on STORAGE (not an executor-local
-      // checkpoint) before any live directory is touched. A fully-
-      // emptied cell simply writes no staging dir and gets no rename.
-      raw.filter(col("cell").isin(affected.map(Int.box).toSeq: _*))
-        .join(tomb, Seq("nid"), "left_anti")
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(staging)
-      // swap
-      affected.foreach { c =>
-        graft.util.Fs.rmTree(spark, s"$dir/codes/cell=$c")
-        if (graft.util.Fs.exists(spark, s"$staging/cell=$c"))
-          graft.util.Fs.rename(spark, s"$staging/cell=$c",
-            s"$dir/codes/cell=$c"): Unit
+    * Crash-safe via the kernel's stage-and-swap; tombstones are dropped
+    * only after the full swap, so a crash anywhere leaves merge-on-read
+    * correct and the next pass recovers. A fully-emptied cell writes
+    * no staging dir and is only removed. */
+  def compact(spark: SparkSession, dir: String): Unit =
+    compactIn(spark, dir, None)
+
+  /** [[compact]] for the two-level (filterCol, cell) layout: rewrites
+    * ONLY the (value, cell) partition pairs that contain tombstoned
+    * rows, stage-and-swap with the same crash-recovery contract.
+    * Partition directory names are reconstructed from the pair values,
+    * so the filter column must be PATH-SAFE (integral or simple
+    * strings — the same values Spark writes verbatim into
+    * `filterCol=value/` directory names). */
+  def compactFiltered(spark: SparkSession, dir: String,
+      filterCol: String): Unit =
+    compactIn(spark, dir, Some(filterCol))
+
+  private def compactIn(spark: SparkSession, dir: String,
+      filterCol: Option[String]): Unit =
+    mutate(spark, dir, "compact", filterCol) { _ =>
+      val codes = recoverCodes(spark, dir, filterCol)
+      if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
+        graft.util.StoreKernel.dropRows(spark, codes,
+          spark.read.parquet(s"$dir/codes"),
+          spark.read.parquet(s"$dir/tombstones").select(col("nid")), "nid")
+        graft.util.Fs.rmTree(spark, s"$dir/tombstones")
       }
-      graft.util.Fs.rmTree(spark, staging)
     }
-    graft.util.Fs.rmTree(spark, s"$dir/tombstones")
-      }
-  }
 
-  /** Recovery for a crashed single-level stage-and-swap ([[compact]] /
-    * [[compactFiles]] — shared staging, either recovers the other): a
-    * staged cell whose live directory is missing is the only copy of
-    * its rows and is renamed in; the rest is stale and discarded. */
-  private def sweepPlainStaging(spark: SparkSession, dir: String,
-      staging: String): Unit = {
-    graft.util.Fs.listDirNames(spark, staging)
-      .filter(_.startsWith("cell="))
-      .foreach { cellDir =>
-        if (!graft.util.Fs.exists(spark, s"$dir/codes/$cellDir"))
-          graft.util.Fs.rename(spark, s"$staging/$cellDir",
-            s"$dir/codes/$cellDir")
-      }
-    graft.util.Fs.rmTree(spark, staging)
-  }
-
-  /** FILE-MERGE maintenance for the plain store (the append-history
-    * bound, [[graft.llm.DedupIndex.compactFiles]]'s contract applied
-    * to the cell layout): every [[append]] lands one file per touched
-    * `cell=` directory and [[compact]] only folds tombstones, so a
-    * K-ingest history accumulates O(K) files per cell and search scan
-    * tasks grow with history rather than data. Rewrites ONLY cell
+  /** FILE-MERGE maintenance (the append-history bound,
+    * [[graft.llm.DedupIndex.compactFiles]]'s contract applied to the
+    * cell layout): every [[append]] lands one file per touched `cell=`
+    * directory and [[compact]] only folds tombstones, so a K-ingest
+    * history accumulates O(K) files per cell and search scan tasks
+    * grow with history rather than data. Rewrites ONLY cell
     * directories whose data-file count exceeds `maxFiles`, verbatim
     * rows, stage-and-swap through [[compact]]'s staging path (either
     * pass recovers the other's crash). `maxRecordsPerFile` re-splits
     * a genuinely huge cell so the merge cannot produce one monster
     * file. */
   def compactFiles(spark: SparkSession, dir: String, maxFiles: Int = 16,
-      maxRecordsPerFile: Long = 8000000L): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiles") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiles")
-    require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    requireUnfiltered(readVMeta(spark, dir), dir,
-      "compactFiles")
-    val staging = s"$dir/codes_staging"
-    sweepPlainStaging(spark, dir, staging)
-    val live = s"$dir/codes"
-    val over = graft.util.Fs.listDirNames(spark, live)
-      .filter(_.startsWith("cell="))
-      .filter(d => graft.util.Fs.dataFileCount(spark, s"$live/$d") > maxFiles)
-      .map(_.stripPrefix("cell=").toInt)
-    if (over.isEmpty) return
-    spark.read.parquet(live)
-      .filter(col("cell").isin(over.map(Int.box): _*))
-      .repartition(col("cell"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("cell").parquet(staging)
-    over.foreach { c =>
-      graft.util.Fs.rmTree(spark, s"$live/cell=$c")
-      if (graft.util.Fs.exists(spark, s"$staging/cell=$c"))
-        graft.util.Fs.rename(spark, s"$staging/cell=$c",
-          s"$live/cell=$c"): Unit
+      maxRecordsPerFile: Long = 8000000L): Unit =
+    compactFilesIn(spark, dir, None, maxFiles, maxRecordsPerFile)
+
+  /** [[compactFiles]] for the two-level (filterCol, cell) layout:
+    * merges the (value, cell) partition pairs whose data-file count
+    * exceeds `maxFiles`, through [[compactFiltered]]'s staging path. */
+  def compactFilesFiltered(spark: SparkSession, dir: String,
+      filterCol: String, maxFiles: Int = 16,
+      maxRecordsPerFile: Long = 8000000L): Unit =
+    compactFilesIn(spark, dir, Some(filterCol), maxFiles, maxRecordsPerFile)
+
+  private def compactFilesIn(spark: SparkSession, dir: String,
+      filterCol: Option[String], maxFiles: Int,
+      maxRecordsPerFile: Long): Unit =
+    mutate(spark, dir, "compactFiles", filterCol) { _ =>
+      require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
+      graft.util.StoreKernel.mergeFiles(spark,
+        recoverCodes(spark, dir, filterCol), maxFiles, maxRecordsPerFile)
     }
-    graft.util.Fs.rmTree(spark, staging)
-      }
-  }
 
   /** Load if the stored fingerprint matches `corpus`, else (re)build.
     * The check costs one aggregate over the corpus — vastly cheaper
     * than the two Lloyd trainings plus encode a rebuild costs, and it
     * makes a stale index (regenerated testdata, different sf dir
-    * mapped to the same path) impossible to silently search. */
+    * mapped to the same path) impossible to silently search. A
+    * crashed-append marker or an unreadable meta rebuilds; a
+    * corpus-side failure rethrows ([[graft.util.StoreKernel.ensure]]). */
   def ensure(corpus: DataFrame, dir: String, nCells: Int = 16,
-      m: Int = 16, kCodes: Int = 16): Loaded = {
+      m: Int = 16, kCodes: Int = 16): Loaded =
+    ensureIn(corpus, dir, None, nCells, m, kCodes)
+
+  def ensureFiltered(corpus: DataFrame, dir: String, filterCol: String,
+      nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Loaded =
+    ensureIn(corpus, dir, Some(filterCol), nCells, m, kCodes)
+
+  private def ensureIn(corpus: DataFrame, dir: String,
+      filterCol: Option[String], nCells: Int, m: Int, kCodes: Int): Loaded = {
     val spark = corpus.sparkSession
-    // Failure separation (r13 advice, same as DedupIndex.ensure): only
-    // a missing/corrupt META (NonFatal) or a crashed-append marker
-    // means "rebuild"; the corpus-side fingerprint aggregate RETHROWS
-    // on failure — a transient I/O error must never trigger the
-    // rebuild's delete of a healthy store.
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readVMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        meta.getAs[Int]("n_cells") == nCells &&
-          meta.getAs[Int]("m") == m && meta.getAs[Int]("k_codes") == kCodes
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum) = fingerprint(corpus) // NOT caught
-        meta.getAs[Long]("n_vectors") == n &&
-          meta.getAs[Long]("checksum") == sum
-      }
-    }
-    if (!valid) build(corpus, dir, nCells, m, kCodes)
+    graft.util.StoreKernel.ensure(spark, dir) { meta =>
+      filterOf(meta) == filterCol && meta.getAs[Int]("n_cells") == nCells &&
+        meta.getAs[Int]("m") == m && meta.getAs[Int]("k_codes") == kCodes
+    } { meta =>
+      val (n, sum) = fingerprint(corpus, filterCol)
+      meta.getAs[Long]("n_vectors") == n && meta.getAs[Long]("checksum") == sum
+    }(buildIn(corpus, dir, filterCol, nCells, m, kCodes))
     load(spark, dir)
   }
 
@@ -378,117 +372,64 @@ object VectorIndex {
     * rebuild. Cost: one scan of the BATCH, zero touch of existing
     * partitions.
     */
-  def append(batch: DataFrame, dir: String): Unit = {
+  def append(batch: DataFrame, dir: String): Unit =
+    appendIn(batch, dir, None)
+
+  /** [[append]] for the filtered store: the batch is encoded WITH its
+    * filter column into the two-level partitions. */
+  def appendFiltered(batch: DataFrame, dir: String,
+      filterCol: String): Unit =
+    appendIn(batch, dir, Some(filterCol))
+
+  private def appendIn(batch: DataFrame, dir: String,
+      filterCol: Option[String]): Unit = {
     val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "append") {
-    import spark.implicits._
-    val ix = load(spark, dir) // marker-checked at the gateway
-    val meta = readVMeta(spark, dir)
-    requireUnfiltered(meta, dir, "append")
-    val (bn, bsum) = fingerprint(batch)
-    // Crash contract: the codes append and the meta commit are two
-    // writes; without a marker a crash between them lets a REDELIVERED
-    // batch double-encode its rows while the corpus-side XOR
-    // fingerprint lands on the correct-looking union value — phantom
-    // duplicates ensure() can never detect. Marker down first, cleared
-    // after the meta commit; ensure() rebuilds on sight of it.
-    graft.util.IngestMarker.write(spark, dir,
-      s"append of $bn vectors in flight")
-    // repartition by cell BEFORE the partitioned append, as build()
-    // does: without it every task writes a file into every cell it
-    // touches — the tasks x cells small-files explosion
-    Similarity.ivfPqEncode(batch, ix.coarse, ix.books)
-      .repartition(col("cell"))
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/codes")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") + bn,
-      meta.getAs[Long]("checksum") ^ bsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      None, meta.getAs[Int]("format_version"))
-    graft.util.IngestMarker.clear(spark, dir)
+    mutate(spark, dir, "append", filterCol) { meta =>
+      val (coarse, books) = readCodebooks(spark, dir, meta)
+      val (bn, bsum) = fingerprint(batch, filterCol)
+      // Crash contract: the codes append and the meta commit are two
+      // writes; without a marker a crash between them lets a
+      // REDELIVERED batch double-encode its rows while the corpus-side
+      // XOR fingerprint lands on the correct-looking union value —
+      // phantom duplicates ensure() can never detect. Marker down
+      // first, cleared after the meta commit; ensure() rebuilds on
+      // sight of it.
+      graft.util.IngestMarker.write(spark, dir,
+        s"${opName("append", filterCol)} of $bn vectors in flight")
+      // repartition by the partition columns BEFORE the partitioned
+      // append, as build() does (the tasks x cells small-files rule)
+      Similarity.ivfPqEncode(batch, coarse, books, keepCols = filterCol.toSeq)
+        .repartition(partCols(filterCol).map(col): _*)
+        .write.mode("append").partitionBy(partCols(filterCol): _*)
+        .parquet(s"$dir/codes")
+      commitMeta(spark, dir, meta, bn, bsum)
+      graft.util.IngestMarker.clear(spark, dir)
     }
   }
 
-  /** Search the stored index: distinct probed cells of the query set
-    * (ONE aggregate on the small query side, result ≤ nCells values)
-    * become an `IN`-list filter on the cell-partitioned scan —
-    * partition-directory pruning, so un-probed cells are never read —
-    * then the shared IVFADC kernel ([[Similarity.ivfPqSearch]]) scores
-    * codes and exact-reranks the shortlist against `corpus`. */
-  def search(ix: Loaded, queries: DataFrame, corpus: DataFrame, k: Int,
-      nProbe: Int = 6, shortlist: Int = 64): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    val bcCoarse = sc.broadcast(ix.coarse)
-    val nP = nProbe
+  /** The cell-partitioned codes restricted to the cells the query set
+    * probes: ONE aggregate on the small query side (≤ nCells values)
+    * becomes an `IN`-list filter — partition-directory pruning, so
+    * un-probed cells are never read. */
+  private def probedCodes(ix: Loaded, queries: DataFrame,
+      nProbe: Int): DataFrame = {
+    val bcCoarse = queries.sparkSession.sparkContext.broadcast(ix.coarse)
     val probeCells = udf { (v: Seq[Float]) =>
-      Similarity.probeCellsKernel(bcCoarse.value, v, nP)
+      Similarity.probeCellsKernel(bcCoarse.value, v, nProbe)
     }
     val cellsNeeded = queries
       .select(explode(probeCells(col("embedding"))).as("cell"))
       .distinct().collect().map(_.getInt(0)).sorted
-    val pruned = ix.codes.filter(col("cell").isin(cellsNeeded.map(Int.box): _*))
-    Similarity.ivfPqSearch(queries, pruned, ix.coarse, ix.books, corpus,
-      k, nProbe, shortlist)
+    ix.codes.filter(col("cell").isin(cellsNeeded.map(Int.box): _*))
   }
 
-  // ------------------------------------------- filtered (predicate) store
-
-  /** Build a PRE-FILTERED store: codes partitioned by (filterCol, cell)
-    * — the layout v18's scaladoc promises at 100 TB ("st14's store with
-    * one more partition column"). A filtered search then prunes BOTH
-    * partition levels: only the query set's predicate values and probed
-    * cells are ever listed into tasks. The filter column participates
-    * in the fingerprint (a relabeled corpus must invalidate the store).
-    */
-  def buildFiltered(corpus: DataFrame, dir: String, filterCol: String,
-      nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Unit = {
-    val spark = corpus.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "buildFiltered") {
-    import spark.implicits._
-    buildsThisProcess += 1
-    graft.util.Fs.rmTree(spark, dir)
-    val (coarse, books) = Similarity.ivfPqTrain(corpus, nCells, m, kCodes)
-    val (n, sum) = fingerprint(corpus, Seq(filterCol))
-    Similarity.ivfPqEncode(corpus, coarse, books, keepCols = Seq(filterCol))
-      .repartition(col(filterCol), col("cell"))
-      .write.mode("overwrite").partitionBy(filterCol, "cell")
-      .parquet(s"$dir/codes")
-    val coarseRows = coarse.zipWithIndex.map { case (v, c) => (0, 0, c, v.toSeq) }
-    val bookRows = for {
-      (subArr, sub) <- books.zipWithIndex.toSeq
-      (v, c) <- subArr.zipWithIndex.toSeq
-    } yield (1, sub, c, v.toSeq)
-    (coarseRows.toSeq ++ bookRows)
-      .toDF("level", "sub", "code", "vals")
-      .repartition(1).write.mode("overwrite").parquet(s"$dir/codebooks")
-    writeVMeta(spark, dir, n, sum, coarse(0).length, nCells, m, kCodes,
-      Some(filterCol), 1)
-    }
-  }
-
-  def ensureFiltered(corpus: DataFrame, dir: String, filterCol: String,
-      nCells: Int = 16, m: Int = 16, kCodes: Int = 16): Loaded = {
-    val spark = corpus.sparkSession
-    // same failure separation as [[ensure]]
-    val metaOpt =
-      if (graft.util.IngestMarker.present(spark, dir)) None
-      else try Some(readVMeta(spark, dir))
-      catch { case scala.util.control.NonFatal(_) => None }
-    val valid = metaOpt.exists { meta =>
-      val shapeOk = try {
-        meta.getAs[String]("filter_col") == filterCol &&
-          meta.getAs[Int]("n_cells") == nCells &&
-          meta.getAs[Int]("m") == m && meta.getAs[Int]("k_codes") == kCodes
-      } catch { case scala.util.control.NonFatal(_) => false }
-      shapeOk && {
-        val (n, sum) = fingerprint(corpus, Seq(filterCol)) // NOT caught
-        meta.getAs[Long]("n_vectors") == n &&
-          meta.getAs[Long]("checksum") == sum
-      }
-    }
-    if (!valid) buildFiltered(corpus, dir, filterCol, nCells, m, kCodes)
-    load(spark, dir)
-  }
+  /** Search the stored index over its probed cells ([[probedCodes]]),
+    * then the shared IVFADC kernel ([[Similarity.ivfPqSearch]]) scores
+    * codes and exact-reranks the shortlist against `corpus`. */
+  def search(ix: Loaded, queries: DataFrame, corpus: DataFrame, k: Int,
+      nProbe: Int = 6, shortlist: Int = 64): DataFrame =
+    Similarity.ivfPqSearch(queries, probedCodes(ix, queries, nProbe),
+      ix.coarse, ix.books, corpus, k, nProbe, shortlist)
 
   /** Pre-filtered search over a [[buildFiltered]] store: nProbe
     * defaults to 8 (the filtered-search compensation measured on v18 —
@@ -500,239 +441,13 @@ object VectorIndex {
   def searchFiltered(ix: Loaded, queries: DataFrame, corpus: DataFrame,
       filterCol: String, k: Int, nProbe: Int = 8,
       shortlist: Int = 64): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    val bcCoarse = sc.broadcast(ix.coarse)
-    val nP = nProbe
-    val probeCells = udf { (v: Seq[Float]) =>
-      Similarity.probeCellsKernel(bcCoarse.value, v, nP)
-    }
-    val cellsNeeded = queries
-      .select(explode(probeCells(col("embedding"))).as("cell"))
-      .distinct().collect().map(_.getInt(0)).sorted
-    var pruned = ix.codes.filter(col("cell").isin(cellsNeeded.map(Int.box): _*))
+    val probed = probedCodes(ix, queries, nProbe)
     val fVals = queries.select(col(filterCol)).distinct().limit(65).collect()
-    if (fVals.length <= 64)
-      pruned = pruned.filter(col(filterCol).isin(fVals.map(_.get(0)): _*))
+    val pruned =
+      if (fVals.length <= 64) probed.filter(col(filterCol).isin(fVals.map(_.get(0)): _*))
+      else probed
     Similarity.ivfPqSearch(queries, pruned, ix.coarse, ix.books, corpus,
       k, nProbe, shortlist, filterCol = Some(filterCol))
-  }
-
-  // ------------------------------------ filtered-store maintenance (v27)
-
-  private def requireFiltered(meta: org.apache.spark.sql.Row,
-      dir: String, filterCol: String, op: String): Unit = {
-    require(meta.schema.fieldNames.contains("filter_col") &&
-        meta.getAs[String]("filter_col") == filterCol,
-      s"$op expects a FILTERED store keyed by '$filterCol' at $dir — " +
-        "found " + (if (meta.schema.fieldNames.contains("filter_col"))
-          s"filter_col='${meta.getAs[String]("filter_col")}'"
-        else "an unfiltered store"))
-  }
-
-  /** [[delete]] for the (filterCol, cell)-partitioned store: identical
-    * tombstone + membership + XOR-fingerprint mechanics, but the
-    * fingerprint includes the filter column (a relabeled corpus must
-    * invalidate) — so `deleted` must carry (vec_id, embedding,
-    * filterCol). [[load]]'s nid anti-join is layout-independent, so
-    * merge-on-read works unchanged on the two-level store. */
-  def deleteFiltered(deleted: DataFrame, dir: String,
-      filterCol: String): Unit = {
-    val spark = deleted.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "deleteFiltered") {
-    import spark.implicits._
-    graft.util.IngestMarker.requireAbsent(spark, dir, "deleteFiltered")
-    val meta = readVMeta(spark, dir)
-    requireFiltered(meta, dir, filterCol, "deleteFiltered")
-    val ids = deleted.select(col("vec_id").cast("long").as("nid"))
-      .localCheckpoint(eager = true)
-    // one aggregate for audits + fingerprint (see [[delete]]); the
-    // filtered fingerprint hashes the filter column too
-    val audit = deleted.agg(count(lit(1)),
-      countDistinct(col("vec_id")),
-      expr(s"bit_xor(xxhash64(vec_id, embedding, $filterCol))")).head()
-    val nDel = audit.getLong(0)
-    require(audit.getLong(1) == nDel,
-      s"delete set contains duplicate vec_ids")
-    val nStored = ids.join(spark.read.parquet(s"$dir/codes").select("nid"),
-      Seq("nid"), "left_semi").count()
-    require(nStored == nDel,
-      s"${nDel - nStored} of $nDel vec_ids are not present in the index at $dir")
-    if (graft.util.Fs.exists(spark, s"$dir/tombstones")) {
-      val nAlready = ids.join(
-        spark.read.parquet(s"$dir/tombstones").select("nid"),
-        Seq("nid"), "left_semi").count()
-      require(nAlready == 0,
-        s"$nAlready of $nDel vec_ids are already tombstoned (double delete)")
-    }
-    val dn = nDel
-    val dsum = if (audit.isNullAt(2)) 0L else audit.getLong(2)
-    ids.repartition(1).write.mode("append").parquet(s"$dir/tombstones")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") - dn,
-      meta.getAs[Long]("checksum") ^ dsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      Some(filterCol), meta.getAs[Int]("format_version"))
-    }
-  }
-
-  /** [[compact]] for the two-level (filterCol, cell) layout: rewrites
-    * ONLY the (value, cell) partition pairs that contain tombstoned
-    * rows, stage-and-swap with the same crash-recovery contract.
-    * Partition directory names are reconstructed from the pair values,
-    * so the filter column must be PATH-SAFE (integral or simple
-    * strings — the same values Spark writes verbatim into
-    * `filterCol=value/` directory names). */
-  /** Recovery sweep for a crashed two-level stage-and-swap: a staged
-    * value=/cell= pair whose live dir is missing is the only copy of
-    * those survivors — rename it in; staged pairs whose live dir
-    * survived are stale and discarded with the staging root. */
-  private def sweepFilteredStaging(spark: SparkSession, dir: String,
-      filterCol: String, staging: String): Unit = {
-    graft.util.Fs.listDirNames(spark, staging)
-      .filter(_.startsWith(s"$filterCol="))
-      .foreach { vDir =>
-        graft.util.Fs.listDirNames(spark, s"$staging/$vDir")
-          .filter(_.startsWith("cell="))
-          .foreach { cDir =>
-            if (!graft.util.Fs.exists(spark, s"$dir/codes/$vDir/$cDir")) {
-              graft.util.Fs.mkdirs(spark, s"$dir/codes/$vDir")
-              graft.util.Fs.rename(spark, s"$staging/$vDir/$cDir",
-                s"$dir/codes/$vDir/$cDir"): Unit
-            }
-          }
-      }
-    graft.util.Fs.rmTree(spark, staging)
-  }
-
-  def compactFiltered(spark: SparkSession, dir: String,
-      filterCol: String): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFiltered") {
-    graft.util.IngestMarker.requireAbsent(spark, dir, "compactFiltered")
-    // Layout check BEFORE the recovery sweep (see [[compact]]): a
-    // filtered compact pointed at a plain store must fail loud before
-    // it can delete a crashed plain compact's staged survivors.
-    requireFiltered(readVMeta(spark, dir), dir,
-      filterCol, "compactFiltered")
-    // distinct from the plain variant's codes_staging: even a caller
-    // bypassing the guard can never sweep the other variant's stage
-    val staging = s"$dir/codes_staging_filtered"
-    // LEGACY sweep first (r13 advice): before the staging dir was
-    // renamed to codes_staging_filtered, a filtered compact staged
-    // into codes_staging — a pre-upgrade crash mid-swap left its only
-    // copy of survivors there, which the renamed path's sweep would
-    // never restore (and the plain compact now REJECTS filtered
-    // stores before its own sweep runs). On a store whose meta says
-    // filtered, anything under codes_staging with the two-level shape
-    // is that crash state: recover it by the same staged-pair rule.
-    sweepFilteredStaging(spark, dir, filterCol, s"$dir/codes_staging")
-    sweepFilteredStaging(spark, dir, filterCol, staging)
-    if (!graft.util.Fs.exists(spark, s"$dir/tombstones")) return
-    val tomb = spark.read.parquet(s"$dir/tombstones").select(col("nid"))
-    val raw = spark.read.parquet(s"$dir/codes")
-    val affected = raw.join(tomb, Seq("nid"), "left_semi")
-      .select(col(filterCol).cast("string").as("v"), col("cell"))
-      .distinct().collect().map(r => (r.getString(0), r.getInt(1)))
-    if (affected.nonEmpty) {
-      val affectedSet = affected.toSet
-      val pairOf = concat(col(filterCol).cast("string"), lit("\u0001"),
-        col("cell").cast("string"))
-      val affectedKeys = affected.map { case (v, c) => s"$v\u0001$c" }
-      raw.filter(pairOf.isin(affectedKeys.toSeq: _*))
-        .join(tomb, Seq("nid"), "left_anti")
-        .repartition(col(filterCol), col("cell"))
-        .write.mode("overwrite").partitionBy(filterCol, "cell")
-        .parquet(staging)
-      affectedSet.foreach { case (v, c) =>
-        graft.util.Fs.rmTree(spark, s"$dir/codes/$filterCol=$v/cell=$c")
-        if (graft.util.Fs.exists(spark, s"$staging/$filterCol=$v/cell=$c")) {
-          graft.util.Fs.mkdirs(spark, s"$dir/codes/$filterCol=$v")
-          graft.util.Fs.rename(spark, s"$staging/$filterCol=$v/cell=$c",
-            s"$dir/codes/$filterCol=$v/cell=$c"): Unit
-        }
-      }
-      graft.util.Fs.rmTree(spark, staging)
-    }
-    graft.util.Fs.rmTree(spark, s"$dir/tombstones")
-      }
-  }
-
-  /** [[compactFiles]] for the two-level (filterCol, cell) layout:
-    * merges the (value, cell) partition pairs whose data-file count
-    * exceeds `maxFiles`, verbatim rows, stage-and-swap through
-    * [[compactFiltered]]'s staging path (and its legacy sweep). */
-  def compactFilesFiltered(spark: SparkSession, dir: String,
-      filterCol: String, maxFiles: Int = 16,
-      maxRecordsPerFile: Long = 8000000L): Unit = {
-    graft.util.StoreLease.withLease(spark, dir, "compactFilesFiltered") {
-    graft.util.IngestMarker.requireAbsent(spark, dir,
-      "compactFilesFiltered")
-    require(maxFiles >= 1, s"maxFiles must be >= 1: $maxFiles")
-    requireFiltered(readVMeta(spark, dir), dir,
-      filterCol, "compactFilesFiltered")
-    sweepFilteredStaging(spark, dir, filterCol, s"$dir/codes_staging")
-    val staging = s"$dir/codes_staging_filtered"
-    sweepFilteredStaging(spark, dir, filterCol, staging)
-    val live = s"$dir/codes"
-    val over: Seq[(String, Int)] = graft.util.Fs
-      .listDirNames(spark, live).filter(_.startsWith(s"$filterCol="))
-      .flatMap { vDir =>
-        graft.util.Fs.listDirNames(spark, s"$live/$vDir")
-          .filter(_.startsWith("cell="))
-          .filter(cDir => graft.util.Fs.dataFileCount(spark,
-            s"$live/$vDir/$cDir") > maxFiles)
-          .map(cDir => (vDir.stripPrefix(s"$filterCol="),
-            cDir.stripPrefix("cell=").toInt))
-      }
-    if (over.isEmpty) return
-    val pairOf = concat(col(filterCol).cast("string"), lit("\u0001"),
-      col("cell").cast("string"))
-    val overKeys = over.map { case (v, c) => s"$v\u0001$c" }
-    spark.read.parquet(live)
-      .filter(pairOf.isin(overKeys: _*))
-      .repartition(col(filterCol), col("cell"))
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(filterCol, "cell").parquet(staging)
-    over.foreach { case (v, c) =>
-      graft.util.Fs.rmTree(spark, s"$live/$filterCol=$v/cell=$c")
-      if (graft.util.Fs.exists(spark, s"$staging/$filterCol=$v/cell=$c")) {
-        graft.util.Fs.mkdirs(spark, s"$live/$filterCol=$v")
-        graft.util.Fs.rename(spark, s"$staging/$filterCol=$v/cell=$c",
-          s"$live/$filterCol=$v/cell=$c"): Unit
-      }
-    }
-    graft.util.Fs.rmTree(spark, staging)
-      }
-  }
-
-  /** [[append]] for the filtered store: frozen quantizers, the batch
-    * encoded WITH its filter column and appended into the two-level
-    * partitions; fingerprint (which includes the filter column)
-    * updates incrementally. */
-  def appendFiltered(batch: DataFrame, dir: String,
-      filterCol: String): Unit = {
-    val spark = batch.sparkSession
-    graft.util.StoreLease.withLease(spark, dir, "appendFiltered") {
-    import spark.implicits._
-    val ix = load(spark, dir) // marker-checked at the gateway
-    val meta = readVMeta(spark, dir)
-    requireFiltered(meta, dir, filterCol, "appendFiltered")
-    val (bn, bsum) = fingerprint(batch, Seq(filterCol))
-    // same crash contract as [[append]]
-    graft.util.IngestMarker.write(spark, dir,
-      s"appendFiltered of $bn vectors in flight")
-    Similarity.ivfPqEncode(batch, ix.coarse, ix.books,
-        keepCols = Seq(filterCol))
-      .repartition(col(filterCol), col("cell"))
-      .write.mode("append").partitionBy(filterCol, "cell")
-      .parquet(s"$dir/codes")
-    writeVMeta(spark, dir, meta.getAs[Long]("n_vectors") + bn,
-      meta.getAs[Long]("checksum") ^ bsum,
-      meta.getAs[Int]("dim"), meta.getAs[Int]("n_cells"),
-      meta.getAs[Int]("m"), meta.getAs[Int]("k_codes"),
-      Some(filterCol), meta.getAs[Int]("format_version"))
-    graft.util.IngestMarker.clear(spark, dir)
-    }
   }
 
   private def indexDirFor(sfDir: String): String =

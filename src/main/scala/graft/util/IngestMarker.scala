@@ -3,7 +3,8 @@ package graft.util
 import org.apache.spark.sql.SparkSession
 
 /** Two-phase-ingest guard for the persisted index stores
-  * ([[graft.llm.DedupIndex]], [[graft.llm.VectorIndex]]): an append
+  * ([[graft.llm.DedupIndex]], [[graft.llm.TextIndex]],
+  * [[graft.llm.VectorIndex]], [[graft.llm.GraphAnn]]): an append
   * writes data files into live partition directories FIRST and commits
   * the meta fingerprint LAST, so a crash between the two leaves the
   * store holding half a batch while meta still describes the old

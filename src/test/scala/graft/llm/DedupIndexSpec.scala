@@ -726,4 +726,28 @@ class DedupIndexSpec extends SparkSpec {
     assert(DedupIndex.append(df(Seq((200L, doc(200)))), dir,
       threshold = 0.9).count() == 1)
   }
+
+  test("delete counts distinct ids AFTER the cast to the tombstoned " +
+      "long: 7.0 and 7.5 fail loud and leave meta and tombstones " +
+      "untouched") {
+    import spark.implicits._
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/castdup"
+    val corpus = df((0L until 20L).map(i => (i, doc(i.toInt))))
+    DedupIndex.build(corpus, dir, threshold = 0.9)
+    val meta0 = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val e = intercept[IllegalArgumentException] {
+      DedupIndex.delete(Seq((7.0, doc(7)), (7.5, doc(7)))
+        .toDF("doc_id", "text"), dir)
+    }
+    assert(e.getMessage.contains("duplicate"), e.getMessage)
+    // a lone non-integral id passes the audit; the shingler's id check
+    // must still fire before the marker goes down
+    intercept[IllegalArgumentException] {
+      DedupIndex.delete(Seq((7.0, doc(7))).toDF("doc_id", "text"), dir)
+    }
+    assert(!graft.util.IngestMarker.present(spark, dir))
+    assert(graft.util.Sidecar.readHead(spark, s"$dir/meta") == meta0)
+    assert(!graft.util.Fs.exists(spark, s"$dir/tombstones"))
+  }
 }

@@ -490,4 +490,62 @@ class GraphAnnSpec extends SparkSpec {
       s"expected the actionable format message, got: ${e.getMessage}")
     c.unpersist()
   }
+
+  test("delete counts distinct ids AFTER the cast to the tombstoned " +
+      "long: 7.0 and 7.5 fail loud and leave meta and tombstones " +
+      "untouched") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/castdup"
+    val c = corpus(100).cache()
+    GraphAnn.ensure(c, dir)
+    val meta0 = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val seven = c.filter(col("vec_id") === 7)
+    val twice = seven.select(col("vec_id").cast("double"), col("embedding"))
+      .unionByName(seven.select((col("vec_id") + 0.5).as("vec_id"),
+        col("embedding")))
+    val e = intercept[IllegalArgumentException] {
+      GraphAnn.delete(twice, dir)
+    }
+    assert(e.getMessage.contains("duplicate"), e.getMessage)
+    assert(graft.util.Sidecar.readHead(spark, s"$dir/meta") == meta0)
+    assert(!graft.util.Fs.exists(spark, s"$dir/tombstones"))
+    c.unpersist()
+  }
+
+  test("a crashed append is LOUD: with its marker down, load, delete, " +
+      "compact and repairDensity fail and ensure() rebuilds, whether the " +
+      "crash left no edge table or post-op edges over pre-op meta") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val all = corpus(300).cache()
+    val old = all.filter(col("vec_id") < 270).cache()
+    // crash after the edge table's removal: only the staged copy is left
+    val dirA = s"$base/crash_rm"
+    GraphAnn.ensure(old, dirA)
+    GraphAnn.load(spark, dirA).localCheckpoint(true)
+      .write.mode("overwrite").parquet(s"$dirA/edges_staging")
+    graft.util.Fs.rmTree(spark, s"$dirA/edges")
+    graft.util.IngestMarker.write(spark, dirA, "append of 30 nodes in flight")
+    // crash after the rename: post-op edges, pre-op nodes/ and meta
+    val dirB = s"$base/crash_swapped"
+    GraphAnn.ensure(old, dirB)
+    GraphAnn.buildNeighborGraph(all).write.mode("overwrite")
+      .parquet(s"$dirB/edges")
+    graft.util.IngestMarker.write(spark, dirB, "append of 30 nodes in flight")
+    Seq(dirA, dirB).foreach { dir =>
+      intercept[IllegalArgumentException] { GraphAnn.load(spark, dir) }
+      intercept[IllegalArgumentException] {
+        GraphAnn.delete(old.filter(col("vec_id") < 5), dir)
+      }
+      intercept[IllegalArgumentException] { GraphAnn.compact(old, dir) }
+      intercept[IllegalArgumentException] { GraphAnn.repairDensity(old, dir) }
+      // ensure over the pre-op corpus must not trust the store
+      val b0 = GraphAnn.buildsThisProcess
+      val edges = GraphAnn.ensure(old, dir)
+      assert(GraphAnn.buildsThisProcess == b0 + 1,
+        s"ensure did not rebuild through the crash marker at $dir")
+      assert(!graft.util.IngestMarker.present(spark, dir))
+      assert(edges.filter(col("src") >= 270 || col("dst") >= 270).count() == 0)
+    }
+    all.unpersist(); old.unpersist()
+  }
 }

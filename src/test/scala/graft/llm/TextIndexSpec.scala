@@ -285,4 +285,21 @@ class TextIndexSpec extends SparkSpec {
     assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
       s"no bucket partition filter in plan:\n${plan.take(2000)}")
   }
+
+  test("delete counts distinct ids AFTER the cast to the tombstoned " +
+      "long: 7.0 and 7.5 fail loud and leave meta and tombstones " +
+      "untouched") {
+    import spark.implicits._
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/castdup"
+    TextIndex.build(df((0L until 20L).map(i => (i, doc(i.toInt)))), dir)
+    val meta0 = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val e = intercept[IllegalArgumentException] {
+      TextIndex.delete(Seq((7.0, doc(7)), (7.5, doc(7)))
+        .toDF("doc_id", "text"), dir)
+    }
+    assert(e.getMessage.contains("duplicate"), e.getMessage)
+    assert(graft.util.Sidecar.readHead(spark, s"$dir/meta") == meta0)
+    assert(!graft.util.Fs.exists(spark, s"$dir/tombstones"))
+  }
 }

@@ -555,4 +555,25 @@ class VectorIndexSpec extends SparkSpec {
     assert(ix.codes.count() == live.count())
     c.unpersist()
   }
+
+  test("delete counts distinct ids AFTER the cast to the tombstoned " +
+      "long: 7.0 and 7.5 fail loud and leave meta and tombstones " +
+      "untouched") {
+    graft.util.Fs.rmRecursive(new java.io.File(base))
+    val dir = s"$base/castdup"
+    val c = corpus(200).cache()
+    VectorIndex.build(c, dir)
+    val meta0 = graft.util.Sidecar.readHead(spark, s"$dir/meta")
+    val seven = c.filter(col("vec_id") === 7)
+    val twice = seven.select(col("vec_id").cast("double"), col("embedding"))
+      .unionByName(seven.select((col("vec_id") + 0.5).as("vec_id"),
+        col("embedding")))
+    val e = intercept[IllegalArgumentException] {
+      VectorIndex.delete(twice, dir)
+    }
+    assert(e.getMessage.contains("duplicate"), e.getMessage)
+    assert(graft.util.Sidecar.readHead(spark, s"$dir/meta") == meta0)
+    assert(!graft.util.Fs.exists(spark, s"$dir/tombstones"))
+    c.unpersist()
+  }
 }
